@@ -405,46 +405,6 @@ def jaccard_pairs(
     )
 
 
-
-def _cc_round(edges: DataFrame, labels: DataFrame, bcast: bool) -> DataFrame:
-    """One min-label + pointer-jump round. With ``bcast`` the
-    node-sized label/jump frames broadcast explicitly — the sf100
-    disk-death fix (see the JOIN-SHAPE RULE in connected_components):
-    the O(|E|) edge frame must NEVER be the shuffled side of a round's
-    joins. Factored out so the plan shape is pytest-pinnable."""
-    lab = F.broadcast(labels) if bcast else labels
-    neighbor_min = (
-        edges.join(lab, edges.dst == lab.doc_id)
-        .groupBy("src")
-        .agg(F.min("component").alias("nbr"))
-    )
-    stepped = labels.join(
-        neighbor_min, labels.doc_id == neighbor_min.src, "left"
-    ).select(
-        "doc_id",
-        F.least(
-            F.col("component"), F.coalesce(F.col("nbr"), F.col("component"))
-        ).alias("component"),
-    )
-    # pointer jump: component := min(component, label(component)).
-    # label(component) is reachable from component, which is
-    # reachable from doc_id — the invariant that makes the
-    # shortcut safe — and it halves pointer chains each round.
-    jump = stepped.select(
-        F.col("doc_id").alias("_jid"), F.col("component").alias("_jcomp")
-    )
-    jump_side = F.broadcast(jump) if bcast else jump
-    return stepped.join(
-        jump_side, stepped.component == jump_side._jid, "left"
-    ).select(
-        "doc_id",
-        F.least(
-            F.col("component"),
-            F.coalesce(F.col("_jcomp"), F.col("component")),
-        ).alias("component"),
-    )
-
-
 def _driver_union_find(rows: list) -> dict[int, int]:
     """Path-compressed union-find over (a, b) tuples; returns the
     node -> min-member-of-set labeling (the identical fixpoint the
@@ -509,8 +469,7 @@ def _partition_forest(edges: DataFrame) -> DataFrame:
     repartitioned first — ``connected_components`` does this for BOTH
     the first pass (when avg edges/partition exceeds 8M) and the
     re-contraction loop (4M target); direct callers own pass-1 sizing.
-    Ids must already be int64 (``connected_components`` casts integral
-    ids up and routes non-integral ids to the minlabel engine).
+    Ids must already be int64.
     """
     import numpy as np
     import pandas as pd
@@ -639,12 +598,10 @@ def _star_rounds(
     'two-phase') to the star-forest fixpoint; returns (doc_id,
     component) with component = min id of the node's component.
 
-    This is the unbroadcastable regime's round engine: unlike the
-    min-label loop (whose per-round joins shuffle the full edge frame
-    when labels exceed the broadcast gate), each star round's shuffle
-    is bounded by the CURRENT edge frame — which enters forest-sized
-    (O(|V|), via _partition_forest) and only shrinks, because both
-    operations strictly reduce tree heights toward stars. Per round:
+    Each round's shuffle is bounded by the CURRENT edge frame — which
+    enters forest-sized (O(|V|), via _partition_forest) and only
+    shrinks, because both operations strictly reduce tree heights
+    toward stars. Per round:
 
     - large-star: every node u computes m = min(Γ(u) ∪ {u}) and
       re-parents its LARGER neighbors v > u onto m — long chains halve.
@@ -659,7 +616,7 @@ def _star_rounds(
     rounds in the worst case, O(log n) observed. Edges stay canonical
     (src > dst) throughout; per-round distinct is forest-sized.
     Lineage is cut with localCheckpoint every ``checkpoint_every``
-    rounds, exactly as in the min-label loop.
+    rounds.
 
     Fixpoint detection (r11): the edge sets are distinct and canonical,
     so set equality reduces to equal (count, Σ xxhash64(src,dst)) — ONE
@@ -762,6 +719,100 @@ def _star_rounds(
     return out
 
 
+def _star_components(
+    edges: DataFrame,
+    n_pairs: int | None,
+    driver_threshold: int,
+    max_iterations: int,
+    checkpoint_every: int,
+    telemetry: dict | None,
+) -> DataFrame:
+    """The distributed engine over an int64 ``(src, dst)`` edge frame:
+    partition-forest contraction, then large-star/small-star rounds or
+    the driver union-find endgame (see ``connected_components``).
+    Returns (doc_id long, component long), eagerly materialized and
+    holding no persist."""
+    # pass-1 partition sizing (ADVICE r10): _partition_forest holds a
+    # whole partition's edge arrays in memory and only the
+    # re-contraction loop below applies the 4M-edge target, so a
+    # coarsely-partitioned dense frame (few huge partitions) is
+    # repartitioned first when its average exceeds the ~8M-edge /
+    # 250 MB-peak contract — a safety valve that parquet scans at
+    # default 128 MB splits never trigger. Uses the driver gate's
+    # count: driver_threshold=0 callers skip the valve and own their
+    # input partition sizing. The RDD partition probe costs ~0.1-0.3 s
+    # of driver latency, so it runs only when the valve can fire (r14).
+    if n_pairs is not None and n_pairs > _FOREST_PASS1_MAX_PER_PART:
+        n_parts = max(1, edges.rdd.getNumPartitions())
+        if n_pairs / n_parts > _FOREST_PASS1_MAX_PER_PART:
+            edges = edges.repartition(
+                int(n_pairs // _FOREST_TARGET_EDGES_PER_PART) + 1
+            )
+    # ONE pass over the pair frame, total (r11): the forest's
+    # explicit root self-rows carry the complete node set, so the
+    # node frame derives from the (node-sized) forest instead of a
+    # second full evaluation of the pair frame. The sf100 phase
+    # decomposition measured that second scan — the old
+    # labels-from-pairs distinct — at 1820 s of the 2750 s total:
+    # on a lazy 1e9-pair frame it re-ran the entire candidate
+    # join. Every aggregate below is forest-sized.
+    forest = _partition_forest(edges).persist()
+    m_edges = forest.count()
+    n_nodes = forest.select("src").distinct().count()
+    if telemetry is not None:
+        telemetry["n_pairs"] = n_pairs
+        telemetry["n_nodes"] = n_nodes
+        telemetry["forest_edge_trajectory"] = [m_edges]
+    shrink_target = max(driver_threshold, 4 * n_nodes)
+    for _pass in range(4):
+        if m_edges <= shrink_target:
+            break
+        parts = max(1, int(m_edges // _FOREST_TARGET_EDGES_PER_PART) + 1)
+        recontracted = _partition_forest(
+            forest.repartition(parts)
+        ).persist()
+        m2 = recontracted.count()
+        if telemetry is not None:
+            telemetry["forest_edge_trajectory"].append(m2)
+        forest.unpersist()
+        forest = recontracted
+        if m2 >= m_edges:  # no progress — already forest-shaped
+            m_edges = m2
+            break
+        m_edges = m2
+    if driver_threshold and m_edges <= driver_threshold:
+        # self-rows ride along, so the union-find labels singleton
+        # nodes too — the mapping is already complete
+        if telemetry is not None:
+            telemetry["endgame"] = "driver"
+        rows = forest.collect()
+        forest.unpersist()
+        mapping = _driver_union_find([(r[0], r[1]) for r in rows])
+        return edges.sparkSession.createDataFrame(
+            sorted(mapping.items()), "doc_id long, component long"
+        )
+    if telemetry is not None:
+        telemetry["endgame"] = "star"
+    core = _star_rounds(
+        forest,
+        max_iterations=max_iterations,
+        checkpoint_every=checkpoint_every,
+        telemetry=telemetry,
+    )
+    # star rounds drop self-rows (src != dst), so nodes whose every
+    # edge was a self-loop — still present in the forest as (n, n)
+    # roots — re-attach as their own singleton component. The node
+    # set comes from the persisted FOREST (node-sized), never from
+    # the pair frame; materialize before releasing it (ADVICE r10).
+    nodes = forest.select(F.col("src").alias("doc_id")).distinct()
+    singles = nodes.join(
+        core.select("doc_id"), "doc_id", "left_anti"
+    ).select("doc_id", F.col("doc_id").alias("component"))
+    out = core.unionByName(singles).localCheckpoint(eager=True)
+    forest.unpersist()
+    return out
+
+
 def connected_components(
     pairs: DataFrame,
     id_a: str = "doc_a",
@@ -769,63 +820,42 @@ def connected_components(
     max_iterations: int = 50,
     checkpoint_every: int = 2,
     driver_threshold: int = 500_000,
-    broadcast_nodes_max: int = 4_000_000,
-    distinct_edges: bool = True,
-    strategy: str = "star",
     telemetry: dict | None = None,
 ) -> DataFrame:
     """(doc_id, component) labels for the near-duplicate pair graph:
     component = min doc id reachable from the doc. This is the final
     dedup step — keep the row where doc_id == component, drop the rest.
 
-    ``strategy`` picks the distributed engine (the driver gate below
-    applies to both):
+    One distributed engine: ONE mapInPandas scan contracts each
+    partition's edges to its spanning forest (vectorized union-find,
+    zero joins), geometric re-contraction bounds the frame at O(|V|),
+    then alternating large-star/small-star rounds (Kiveris et al.,
+    "Connected Components in MapReduce and Beyond", SoCC'14) finish on
+    the forest-sized frame — or a driver union-find endgame when the
+    contracted forest fits under ``driver_threshold``. No broadcast,
+    no edge doubling, no O(|E|) distinct.
 
-    - ``"star"`` (default, r10): ONE mapInPandas scan contracts each
-      partition's edges to its spanning forest (vectorized union-find,
-      zero joins), geometric re-contraction bounds the frame at
-      O(|V|), then alternating large-star/small-star rounds finish on
-      the forest-sized frame (``_star_rounds``) — or a driver
-      union-find endgame when the contracted forest fits under
-      ``driver_threshold``. No broadcast, no edge doubling, no O(|E|)
-      distinct; every shuffle after the contraction scan is
-      O(|V|)-bounded. Int64-only internally: integral ids are cast up
-      to long (labels come back as long), non-integral ids (strings,
-      decimals) silently route to ``"minlabel"``, which orders on any
-      comparable type. Measured against the min-label loop on the same
-      graphs, identical fixpoints: sf10 image graph (54M pairs / 453k
-      nodes) 120 s vs 221 s; sf100 T=0.35 (10^9 pairs / 1.55M nodes,
-      broadcast disabled) 2274 s vs 3753 s.
-    - ``"minlabel"``: the broadcast min-label loop below — the r9
-      engine, kept as the measured alternative and for its pinned
-      plan-shape regression; above ``broadcast_nodes_max`` it degrades
-      to O(|E|)-shuffle rounds.
+    Id types: the engine is int64 inside. Integral ids are cast up to
+    long (labels come back as long). Any other orderable id type
+    (strings, decimals) is mapped to dense longs first: the distinct
+    ids of both endpoint columns are sorted and numbered with
+    ``zipWithIndex``, the index is joined onto both pair endpoints,
+    and the labels are joined back to the original ids. The index
+    preserves order, so the minimum index is the minimum original id
+    and the fixpoint is unchanged; the output keeps the caller's id
+    type, as the driver gate does. This costs one extra pass over the
+    pair frame (the distinct ids) plus two pair-sized joins, so scale
+    callers should keep long ids.
 
-    The min-label engine: iterative propagation with POINTER JUMPING —
-    every node takes the min of its own label, its neighbors' labels,
-    and its label's label (the path-halving shortcut of
-    hash-to-min-family CC algorithms — Kiveris et al., "Connected
-    Components in MapReduce and Beyond", SoCC'14). The invariant
-    "label(v) is reachable from v" is preserved by both steps, so the
-    fixpoint is the same min-reachable-id the plain propagation finds
-    — but a diameter-D chain converges in O(log D) rounds instead of
-    D. Measured on the sf1 replica corpus (20k nodes / 219k edges,
-    diameter ~22): 23 rounds / 155 s plain → 6 rounds / ~25 s with the
-    jump. Per round: two joins + one groupBy-min, all partitioned on
-    doc id; frames are persisted per round and the previous round
-    unpersisted (the driver-loop anti-pattern this module otherwise
-    avoids is fine here: the loop is over *rounds*, not rows, and each
-    round is fully distributed).
-
-    persist() caches execution but does NOT truncate the logical
-    plan — each round's plan embeds every prior round's, doubling per
-    iteration, and a long-diameter graph (a 14-node chain) OOMs the
-    driver on plan analysis alone (caught by the union-find fuzz
-    test). ``localCheckpoint`` every ``checkpoint_every`` rounds cuts
-    the lineage; integer labels make truncation result-invariant,
-    exactly as in ``pagerank_ranks``. The same sf1 probe showed
-    per-round *analysis* time climbing 1 → 14 s across a 5-round
-    checkpoint window, so the default cadence is every 2 rounds.
+    ``checkpoint_every``: persist() caches execution but does NOT
+    truncate the logical plan — each round's plan embeds every prior
+    round's, and a long-diameter graph OOMs the driver on plan analysis
+    alone (caught by the union-find fuzz test). ``localCheckpoint``
+    every ``checkpoint_every`` star rounds cuts the lineage; integer
+    labels make truncation result-invariant, exactly as in
+    ``pagerank_ranks``. An sf1 probe showed per-round *analysis* time
+    climbing 1 → 14 s across a 5-round checkpoint window, so the
+    default cadence is every 2 rounds.
 
     ``driver_threshold``: pair graphs at or below this edge count run
     union-find ON THE DRIVER instead (path-compressed, then each set
@@ -834,53 +864,28 @@ def connected_components(
     data size, so a 1.2k-edge graph was paying 16 rounds of it (~30 s)
     for microseconds of actual work. The gate is an explicit, counted
     bound — 500k edges ≈ 8 MB on the driver — NOT an unbounded
-    collect: above it the distributed loop runs exactly as before (the
-    sf10 probe's 18M-pair graph stays distributed). Pass 0 to force
-    the distributed path (the fuzz suite does, to keep it covered).
+    collect: above it the distributed engine runs (the sf10 probe's
+    18M-pair graph stays distributed). Pass 0 to force the distributed
+    path (the fuzz suite does, to keep it covered).
 
     JOIN-SHAPE RULE (the sf100 T=0.35 disk-death lesson, SCALE.md r8):
-    the labels frame is node-sized, the edge frame is pair-sized, and
-    on dense dedup graphs |E| >> |V| by orders of magnitude (the 2M-
-    node replica corpus carries ~10^8-10^9 pairs). Labels usually
-    exceed the 10 MB autobroadcast threshold, so without a hint every
-    round's two joins SHUFFLE THE EDGE FRAME (twice per round), and
-    those retained map outputs — not the node-sized state — are what
-    filled the 53 GB scratch. When the node count is at most
-    ``broadcast_nodes_max`` (counted, ~24 B/row -> ~100 MB at the 4M
-    default) the label/jump sides are broadcast explicitly: per-round
-    shuffle volume drops from O(|E|) to O(|V|) (the map-side-combined
-    groupBy output), independent of pair density. Above the bound the
-    min-label loop falls back to O(|E|)-shuffle rounds — which is why
-    the DEFAULT engine is now ``"star"``: its contraction shape needs
-    no broadcast at any node count and survives graphs whose node
-    sets dwarf any single executor. On big graphs both engines force
-    a JVM GC after each lineage checkpoint so the ContextCleaner
-    reaps dereferenced shuffle files between rounds instead of at the
-    periodicGC interval.
+    on dense dedup graphs |E| >> |V| by orders of magnitude (the 2M-node
+    replica corpus carries ~10^8-10^9 pairs), and the retained map
+    outputs of shuffles over the pair frame filled the 53 GB scratch.
+    The contraction scan reads the pair frame once with no shuffle;
+    every later shuffle is forest-sized, and the star rounds force a
+    JVM GC after each lineage checkpoint so the ContextCleaner reaps
+    dereferenced shuffle files between rounds.
 
     ``telemetry`` (optional dict): filled in place with the
     convergence record — ``n_pairs``/``n_nodes``,
     ``forest_edge_trajectory`` (contraction passes),
     ``star_edge_trajectory`` + ``star_rounds_to_fixpoint`` +
-    ``star_converged`` on the star path, or
-    ``minlabel_changed_trajectory`` on the legacy path (all from the
-    aggregates the engines already run — zero extra jobs), and
-    ``endgame`` ("driver" | "star" | "minlabel").  Probes persist it
-    to JSON so convergence regressions — not just wall time — are
-    visible round-over-round (VERDICT r11 #7).
-
-    ``distinct_edges=False`` (minlabel only) skips the O(|E|) distinct
-    shuffle on the doubled edge frame: min-label propagation is
-    duplicate-insensitive (groupBy-min absorbs repeats), so callers
-    whose pair frames are already distinct (the banded/cell-pruned
-    builders here all are) can avoid materializing the single largest
-    exchange in the plan. The star engine ignores it — union-find is
-    duplicate- and direction-agnostic, so it never doubles or
-    distincts the edge frame at all.
+    ``star_converged`` (all from the aggregates the engine already
+    runs — zero extra jobs), and ``endgame`` ("driver" | "star").
+    Probes persist it to JSON so convergence regressions — not just
+    wall time — are visible round-over-round (VERDICT r11 #7).
     """
-    if strategy not in ("star", "minlabel"):
-        raise ValueError(f"strategy must be star|minlabel, got {strategy!r}")
-
     from pyspark.sql.types import (
         ByteType,
         IntegerType,
@@ -895,28 +900,13 @@ def connected_components(
         pairs.schema[id_b].dataType, integral
     )
 
-    # the star engine's contraction lane is int64-only (vectorized numpy
-    # union-find over a `src long, dst long` mapInPandas schema) — ids of
-    # any other orderable type silently worked on the driver gate and the
-    # minlabel loop but raised inside a task here (ADVICE r10). Integral
-    # ids are cast up to long; everything else falls back to minlabel.
-    if strategy == "star" and not ids_integral:
-        strategy = "minlabel"
-
     # Driver gate in ONE bounded evaluation (r13): collect at most
     # driver_threshold+1 edge rows — the length decides the gate, and
-    # when the graph is small the collected rows ARE the full edge
-    # list. The former count()-then-collect() pair evaluated the whole
-    # unpersisted candidate join TWICE for every below-threshold graph
-    # (the same re-evaluation class as the r11 +80 s count finding,
-    # paid by every default caller at fixture scale). Driver memory is
-    # bounded exactly as before: ≤ threshold+1 skinny rows (~8 MB at
-    # the 500k default). Above the threshold, CollectLimit stops after
-    # enough partitions yield threshold+1 rows (usually the first),
-    # and the big-graph path then runs its full count as before — it
-    # still doubles as the star path's pass-1 sizing input. A forced
-    # driver_threshold=0 (probes/fuzz) deliberately skips both — so
-    # gate-off callers own input partition sizing (documented below).
+    # when the graph is small the collected rows ARE the full edge list
+    # (a count()-then-collect() pair evaluated an unpersisted candidate
+    # join twice). Driver memory stays ≤ threshold+1 skinny rows (~8 MB
+    # at the 500k default). Above the threshold the full count feeds
+    # the pass-1 sizing valve; a forced driver_threshold=0 skips both.
     n_pairs = None
     if driver_threshold:
         head = pairs.select(id_a, id_b).limit(driver_threshold + 1).collect()
@@ -936,195 +926,52 @@ def connected_components(
             sorted(mapping.items()), schema
         )
 
-    if strategy == "star":
-        # DEFAULT DISTRIBUTED PATH (r10): one mapInPandas scan
-        # contracts each partition's edges to its spanning forest
-        # (zero joins — _partition_forest), geometric re-contraction
-        # bounds the frame at O(#partitions x |V|) then O(|V|), and
-        # alternating large-star/small-star rounds (Kiveris et al.)
-        # finish on the forest-sized frame — every shuffle after the
-        # one contraction scan is O(|V|)-bounded regardless of pair
-        # density, with NO broadcast anywhere. Measured faster than
-        # the broadcast min-label loop at both probe scales (sf10
-        # image graph 54M pairs/453k nodes: 120 s vs 221 s; sf100
-        # T=0.35 10^9-pair graph: 2274 s vs 3753 s, identical
-        # fixpoints). Needs neither edge doubling nor the O(|E|)
-        # distinct (union-find is direction- and duplicate-agnostic),
-        # so the input scan is the pair frame itself.
+    star_args = (
+        n_pairs, driver_threshold, max_iterations, checkpoint_every, telemetry
+    )
+    if ids_integral:
         edges = pairs.select(
             F.col(id_a).cast("long").alias("src"),
             F.col(id_b).cast("long").alias("dst"),
         )
-        # pass-1 partition sizing (ADVICE r10): _partition_forest holds
-        # one partition's full edge arrays in memory, and the first pass
-        # consumes the RAW pair frame with whatever partitioning it has
-        # — only the re-contraction loop below applies the 4M-edge
-        # target. A coarsely-partitioned dense frame (few huge
-        # partitions) would OOM a task, so when the average exceeds the
-        # documented ~8M-edge / 250 MB-peak contract, repartition to the
-        # 4M target first. Parquet scans at default 128 MB splits never
-        # trigger this (the repartition is itself an O(|E|) shuffle —
-        # a safety valve, not the normal path). Uses the driver gate's
-        # count; callers that force driver_threshold=0 skip the gate AND
-        # this valve (the count would re-evaluate the whole pair join)
-        # and own their input partition sizing.
-        # only pay the RDD partition probe (plan analysis + RDD
-        # conversion, ~0.1-0.3 s driver latency) when the valve can
-        # possibly fire: n_pairs <= MAX implies n_pairs/n_parts <= MAX
-        # for every n_parts >= 1 (r14)
-        if n_pairs is not None and n_pairs > _FOREST_PASS1_MAX_PER_PART:
-            n_parts = max(1, edges.rdd.getNumPartitions())
-            if n_pairs / n_parts > _FOREST_PASS1_MAX_PER_PART:
-                edges = edges.repartition(
-                    int(n_pairs // _FOREST_TARGET_EDGES_PER_PART) + 1
-                )
-        # ONE pass over the pair frame, total (r11): the forest's
-        # explicit root self-rows carry the complete node set, so the
-        # node frame derives from the (node-sized) forest instead of a
-        # second full evaluation of the pair frame. The sf100 phase
-        # decomposition measured that second scan — the old
-        # labels-from-pairs distinct — at 1820 s of the 2750 s total:
-        # on a lazy 1e9-pair frame it re-ran the entire candidate
-        # join. Every aggregate below is forest-sized.
-        forest = _partition_forest(edges).persist()
-        m_edges = forest.count()
-        n_nodes = forest.select("src").distinct().count()
-        if telemetry is not None:
-            telemetry["n_pairs"] = n_pairs
-            telemetry["n_nodes"] = n_nodes
-            telemetry["forest_edge_trajectory"] = [m_edges]
-        shrink_target = max(driver_threshold, 4 * n_nodes)
-        for _pass in range(4):
-            if m_edges <= shrink_target:
-                break
-            parts = max(1, int(m_edges // _FOREST_TARGET_EDGES_PER_PART) + 1)
-            recontracted = _partition_forest(
-                forest.repartition(parts)
-            ).persist()
-            m2 = recontracted.count()
-            if telemetry is not None:
-                telemetry["forest_edge_trajectory"].append(m2)
-            forest.unpersist()
-            forest = recontracted
-            if m2 >= m_edges:  # no progress — already forest-shaped
-                m_edges = m2
-                break
-            m_edges = m2
-        if driver_threshold and m_edges <= driver_threshold:
-            # self-rows ride along, so the union-find labels singleton
-            # nodes too — the mapping is already complete
-            if telemetry is not None:
-                telemetry["endgame"] = "driver"
-            rows = forest.collect()
-            forest.unpersist()
-            mapping = _driver_union_find([(r[0], r[1]) for r in rows])
-            return pairs.sparkSession.createDataFrame(
-                sorted(mapping.items()), "doc_id long, component long"
-            )
-        if telemetry is not None:
-            telemetry["endgame"] = "star"
-        core = _star_rounds(
-            forest,
-            max_iterations=max_iterations,
-            checkpoint_every=checkpoint_every,
-            telemetry=telemetry,
-        )
-        # star rounds drop self-rows (src != dst), so nodes whose every
-        # edge was a self-loop — still present in the forest as (n, n)
-        # roots — re-attach as their own singleton component. The node
-        # set comes from the persisted FOREST (node-sized), never from
-        # the pair frame; materialize before releasing it (ADVICE r10).
-        nodes = forest.select(F.col("src").alias("doc_id")).distinct()
-        singles = nodes.join(
-            core.select("doc_id"), "doc_id", "left_anti"
-        ).select("doc_id", F.col("doc_id").alias("component"))
-        out = core.unionByName(singles).localCheckpoint(eager=True)
-        forest.unpersist()
-        return out
+        return _star_components(edges, *star_args)
 
-    # strategy == "minlabel": the broadcast min-label loop — kept for
-    # the measured record and as the plan-pinned legacy path; above
-    # broadcast_nodes_max it degrades to O(|E|)-shuffle rounds (the
-    # pre-r9 regime), so scale callers should stay on the default.
-    edges = pairs.select(
-        F.col(id_a).alias("src"), F.col(id_b).alias("dst")
-    ).unionByName(
-        pairs.select(F.col(id_b).alias("src"), F.col(id_a).alias("dst"))
-    )
-    if distinct_edges:
-        edges = edges.distinct()
-    edges = edges.persist()
-    labels = (
-        edges.select(F.col("src").alias("doc_id"))
+    # non-integral ids: order-preserving dense index (see docstring)
+    ids = (
+        pairs.select(F.col(id_a).alias("_id"))
+        .unionByName(pairs.select(F.col(id_b).alias("_id")))
         .distinct()
-        .select("doc_id", F.col("doc_id").alias("component"))
-        .persist()
+        .orderBy("_id")
     )
-    # one counted job: materializes both persists and sizes the join
-    # strategy. Node-sized frames broadcast when bounded (see the
-    # JOIN-SHAPE RULE above); big-graph rounds also reap shuffles.
-    n_nodes = labels.count()
-    bcast = 0 < n_nodes <= broadcast_nodes_max
-    big_graph = not bcast or n_nodes > 1_000_000
+    index = pairs.sparkSession.createDataFrame(
+        ids.rdd.zipWithIndex().map(lambda t: (t[0][0], t[1])),
+        StructType(
+            [
+                StructField("_id", ids.schema["_id"].dataType),
+                StructField("_ix", LongType(), False),
+            ]
+        ),
+    ).persist()
 
-    def _reap_shuffles() -> None:
-        # ContextCleaner only deletes shuffle files once their
-        # ShuffleDependency is JVM-garbage; drop the Python proxies,
-        # then force a JVM GC so cleanup happens between rounds, not
-        # at the periodicGC interval (the sf100 disk-death fix).
-        import gc as _pygc
-
-        _pygc.collect()
-        try:
-            edges.sparkSession.sparkContext._jvm.System.gc()
-        except Exception:  # noqa: BLE001 — best-effort on exotic backends
-            pass
-
-    if telemetry is not None:
-        telemetry["endgame"] = "minlabel"
-        telemetry["n_nodes"] = n_nodes
-        telemetry["minlabel_changed_trajectory"] = []
-    changed = 0
-    for _round in range(max_iterations):
-        new_labels = _cc_round(edges, labels, bcast).persist()
-        changed = (
-            new_labels.alias("n")
-            .join(labels.alias("o"), "doc_id")
-            .filter(F.col("n.component") != F.col("o.component"))
-            .count()
+    def _ix(id_name: str, ix_name: str) -> DataFrame:
+        return index.select(
+            F.col("_id").alias(id_name), F.col("_ix").alias(ix_name)
         )
-        if telemetry is not None:
-            telemetry["minlabel_changed_trajectory"].append(changed)
-        labels.unpersist()
-        labels = new_labels
-        if changed == 0:
-            break
-        if checkpoint_every and (_round + 1) % checkpoint_every == 0:
-            truncated = labels.localCheckpoint(eager=True)
-            labels.unpersist()
-            labels = truncated
-            if big_graph:
-                _reap_shuffles()
-    edges.unpersist()
-    if big_graph:
-        _reap_shuffles()
-    if changed != 0:
-        import warnings
 
-        warnings.warn(
-            f"connected_components did not reach fixpoint within "
-            f"{max_iterations} iterations ({changed} labels still "
-            f"changing); returned components may be over-split. "
-            f"Raise max_iterations for graphs with diameter > "
-            f"{max_iterations}.",
-            RuntimeWarning,
-            stacklevel=2,
-        )
-    # same release discipline as the star path (ADVICE r10): the final
-    # round's labels frame is persisted — materialize the node-sized
-    # result, then release, so no cached frame outlives the call
-    out = labels.localCheckpoint(eager=True)
-    labels.unpersist()
+    edges = (
+        pairs.select(F.col(id_a).alias("_a"), F.col(id_b).alias("_b"))
+        .join(_ix("_a", "src"), "_a")
+        .join(_ix("_b", "dst"), "_b")
+        .select("src", "dst")
+    )
+    out = (
+        _star_components(edges, *star_args)
+        .join(_ix("_doc", "doc_id"), "doc_id")
+        .join(_ix("_comp", "component"), "component")
+        .select(F.col("_doc").alias("doc_id"), F.col("_comp").alias("component"))
+        .localCheckpoint(eager=True)
+    )
+    index.unpersist()
     return out
 
 
@@ -2348,10 +2195,7 @@ def semantic_dedup_members(
     pairs = persist_tracked(
         semantic_candidate_pairs(cells, threshold=threshold)
     )
-    # cell-local self-join pairs are distinct by construction
-    comp = connected_components(
-        pairs, id_a="vec_a", id_b="vec_b", distinct_edges=False
-    )
+    comp = connected_components(pairs, id_a="vec_a", id_b="vec_b")
     members = comp.select(
         F.col("doc_id").alias("vec_id"), "component"
     ).join(cos_c, "vec_id")

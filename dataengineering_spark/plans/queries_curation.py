@@ -12,7 +12,7 @@ vs the DuckDB oracle:
   centroid (the paper's keep-rule: prefer the least prototypical
   member). Within-cell pairing is the scale story: candidates are
   cell-local (an equi-join on cid), never the all-pairs square; the
-  cluster step is the same bounded min-label propagation
+  cluster step is the same connected-components engine
   ``dedup_clusters`` runs, and the oracle replays it as a recursive
   transitive closure.
 - ``dsir_weights`` — Data Selection with Importance Resampling
@@ -40,7 +40,7 @@ Scale notes: semantic_dedup's training collect is k-bounded
 (C × dim doubles), assignment is a narrow map against centroid
 literals (no Exchange before the cell id — see
 operators/similarity.ivf_assign), pair generation shuffles on cid
-only, and min-label propagation is bounded by cluster diameter.
+only, and the connected components are contraction + star rounds.
 dsir_weights is two hash-agg passes (corpus bucket counts → B rows;
 per-doc bucket counts) plus one broadcast join of the B-row
 probability table — no shuffle wider than the per-(doc,bucket)
@@ -901,9 +901,7 @@ def q_semantic_reps_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     )
     forest_pairs = forest.filter(F.col("src") != F.col("dst"))
-    comp1 = connected_components(
-        forest_pairs, id_a="src", id_b="dst", distinct_edges=False
-    )
+    comp1 = connected_components(forest_pairs, id_a="src", id_b="dst")
     nonroots = comp1.filter(F.col("doc_id") != F.col("component")).select(
         F.col("doc_id").alias("vec_id")
     )

@@ -617,16 +617,13 @@ FROM norm
 # Q: dedup_clusters — connected components over the LSH candidate
 # pairs: every doc in a near-dup cluster labeled with the cluster's
 # min doc id (keep doc_id == component, drop the rest). Spark runs
-# min-label propagation to fixpoint; the oracle replays it as a
+# connected components to fixpoint; the oracle replays it as a
 # recursive transitive closure — same labels because both compute
 # "min id reachable from the doc".
 # ===========================================================================
 
 def q_dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
-    pairs = _lsh_pairs_cached(spark, sf_dir)
-    # minhash_lsh_pairs is distinct by construction -> skip the
-    # O(|E|) distinct exchange on the doubled edge frame
-    return connected_components(pairs, distinct_edges=False)
+    return connected_components(_lsh_pairs_cached(spark, sf_dir))
 
 
 # the closure CTE is recursive, so the shared CTE chain needs the
@@ -678,14 +675,11 @@ def q_dedup_clusters_forest(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("doc_b").cast("long").alias("dst"),
     )
     forest = _partition_forest(edges).filter(F.col("src") != F.col("dst"))
-    return connected_components(
-        forest, id_a="src", id_b="dst", distinct_edges=False
-    )
+    return connected_components(forest, id_a="src", id_b="dst")
 
 
 def q_dedup_survivors(spark: SparkSession, sf_dir: str) -> DataFrame:
-    pairs = _lsh_pairs_cached(spark, sf_dir)
-    comp = connected_components(pairs, distinct_edges=False)
+    comp = connected_components(_lsh_pairs_cached(spark, sf_dir))
     dropped = comp.filter(F.col("doc_id") != F.col("component")).select(
         "doc_id"
     )
@@ -1685,8 +1679,7 @@ WHERE bit_count(xor(a.dhash, b.dhash)) <= 3
 
 def q_image_dedup_survivors(spark: SparkSession, sf_dir: str) -> DataFrame:
     pairs = q_image_neardup(spark, sf_dir).select("doc_a", "doc_b")
-    # pigeonhole-join pairs are distinct by construction
-    comp = connected_components(pairs, distinct_edges=False)
+    comp = connected_components(pairs)
     dropped = comp.filter(F.col("doc_id") != F.col("component")).select(
         "doc_id"
     )
@@ -3483,11 +3476,9 @@ def q_ngram_novelty(spark: SparkSession, sf_dir: str) -> DataFrame:
     # plan. distinct() matches the oracle's list_distinct per doc;
     # persist because both the first-occurrence agg and the join-back
     # re-reference the frame.
-    # spread: exploded_shingles applies spread_for_compute itself; the
-    # r13 outer wrapper here DOUBLED the round-robin exchange of the
-    # full text payload (spread(spread(docs)) — inputFiles() sees the
-    # same single fixture file both times, so the inner call cannot
-    # detect the outer one; plan read 2 RoundRobin exchanges, r14: 1)
+    # no round-robin spread: the keyed exchange of the distinct()
+    # below redistributes the rows anyway, and a spread would only
+    # add an exchange of the full text payload
     grams = persist_tracked(
         exploded_shingles(docs, "doc_id", "text", n=3)
         .select("doc_id", F.col("shingle").alias("g"))

@@ -44,7 +44,10 @@ from pyspark.sql import functions as F
 
 from dataengineering_spark.caching import persist_tracked
 from dataengineering_spark.catalog import read_table
-from dataengineering_spark.operators.robust import discrete_pcts
+from dataengineering_spark.operators.robust import (
+    _global_pct_order_key,
+    discrete_pcts,
+)
 
 
 def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
@@ -295,13 +298,15 @@ def q_rfm_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
     # collect + hits collect) on a ~50k-row frame at sf0.1.  Driver
     # memory stays bounded: ≤ threshold rows × 3 longs (~2.4 MB).
     # Above the threshold the unpivot + keyed discrete_pcts pass runs
-    # unchanged — the 100 TB path.
+    # unchanged — the 100 TB path. A user whose ts or value is all
+    # NULL has a NULL metric: it sorts first, as in the distributed
+    # ORDER BY, and a NULL cut scores no user past it on either path.
     head = u.select(*metrics).limit(_RFM_DRIVER_MAX + 1).collect()
     if len(head) <= _RFM_DRIVER_MAX:
         n = len(head)
         cuts = {}
         for m in metrics:
-            vals = sorted(int(r[m]) for r in head)
+            vals = sorted((r[m] for r in head), key=_global_pct_order_key)
             cuts[m] = {
                 nm: (vals[int(p * (n - 1))] if n else 0)
                 for p, nm in zip(_RFM_PCTS, _RFM_NAMES)

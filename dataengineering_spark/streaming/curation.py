@@ -555,7 +555,6 @@ def refresh_reps_index(
             .distinct(),
             id_a=a_col,
             id_b=b_col,
-            distinct_edges=False,
         )
         nonroots = comp.filter(
             F.col("doc_id") != F.col("component")
@@ -585,9 +584,7 @@ def semantic_survivor_ids(
     that already has pairs in hand."""
     from dataengineering_spark.operators.similarity import dot
 
-    comp = connected_components(
-        pairs, id_a="vec_a", id_b="vec_b", distinct_edges=False
-    ).select(
+    comp = connected_components(pairs, id_a="vec_a", id_b="vec_b").select(
         F.col("doc_id").alias("vec_id"), "component"
     )
     # cos-to-centroid for clustered members only (centroid = the cell
@@ -750,7 +747,7 @@ def curation_finish(
             .select("doc_a", "doc_b")
             .distinct()
         )
-        mcomp = connected_components(mpairs, distinct_edges=False)
+        mcomp = connected_components(mpairs)
         present = mcomp.join(
             survivors.select(F.col(id_col).alias("doc_id")), "doc_id"
         )

@@ -411,39 +411,6 @@ def test_twap_accepts_quoted_ts_name(spark):
     assert len(out) == 1 and out[0]["n"] == 2
 
 
-def test_cc_round_broadcasts_labels_never_shuffles_edges(spark):
-    """The sf100 disk-death fix pinned at the plan level: with the
-    broadcast gate engaged, a connected-components round must join the
-    edge frame via BroadcastHashJoin (labels broadcast) — never a
-    SortMergeJoin that shuffles O(|E|) edges."""
-    from dataengineering_spark.operators.dedup import _cc_round
-
-    edges = spark.range(5000).selectExpr(
-        "id AS src", "(id + 1) % 5000 AS dst"
-    )
-    labels = spark.range(5000).selectExpr(
-        "id AS doc_id", "id AS component"
-    )
-    plan = (
-        _cc_round(edges, labels, bcast=True)
-        ._jdf.queryExecution()
-        .executedPlan()
-        .toString()
-    )
-    # the EDGE join (edges.dst == labels.doc_id) must be the broadcast
-    # one — node-sized frames may still SortMergeJoin each other (the
-    # intended O(|V|) shuffle)
-    assert "BroadcastHashJoin [dst" in plan, plan[:1500]
-    assert plan.count("BroadcastHashJoin") >= 2, plan[:1500]
-    for line in plan.splitlines():
-        if "SortMergeJoin" in line:
-            assert "[dst" not in line, line
-    # and the rows are right: a cycle converges toward min id
-    out = _cc_round(edges, labels, bcast=True)
-    assert out.count() == 5000
-    assert out.agg({"component": "min"}).collect()[0][0] == 0
-
-
 def test_media_hashers_honor_custom_id_col(spark, tmp_path):
     """Round-9 ADVICE: dhash_images/audio_fingerprints hardcoded their
     output id column to doc_id, so media_neardup_batch_fn(id_col=...)

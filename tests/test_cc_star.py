@@ -1,16 +1,16 @@
-"""The unbroadcastable connected-components regime (r10): partition
-spanning-forest contraction + alternating large-star/small-star
-rounds. Above ``broadcast_nodes_max`` the min-label loop's per-round
-joins would shuffle the O(|E|) edge frame (the pre-r9 disk-death
-shape); the contraction path bounds every shuffle by the forest-sized
-frame instead. These tests force the path with broadcast_nodes_max=0
-and check it against the union-find fixpoint, its structural bounds,
-and the self-loop singleton edge case.
+"""The connected-components engine: partition spanning-forest
+contraction + alternating large-star/small-star rounds, which bounds
+every shuffle after the contraction scan by the forest-sized frame.
+These tests force the distributed path with driver_threshold=0 and
+check it against the union-find fixpoint, its structural bounds, the
+self-loop singleton edge case, and the order-preserving dense index
+that serves string and decimal ids.
 """
 
 from __future__ import annotations
 
 import random
+from decimal import Decimal
 
 import pytest
 
@@ -27,8 +27,8 @@ pytestmark = pytest.mark.slow
 
 
 def _star_path(pairs, **kw):
-    # driver_threshold=0 forces the distributed engine; "star" is the
-    # default strategy, so this exercises contraction + star rounds
+    # driver_threshold=0 forces the distributed engine: contraction +
+    # star rounds
     return connected_components(pairs, driver_threshold=0, **kw)
 
 
@@ -61,7 +61,7 @@ def test_star_path_long_chain_converges(spark):
 def test_star_path_keeps_self_loop_singletons(spark):
     """A node whose every edge is a self-loop never reaches the
     contracted forest — it must still come back as its own
-    singleton component (parity with the min-label loop)."""
+    singleton component (parity with the driver union-find)."""
     pairs = spark.createDataFrame(
         [(1, 2), (7, 7), (9, 9)], "doc_a long, doc_b long"
     )
@@ -109,33 +109,6 @@ def test_star_rounds_fixpoint_on_star_forest_is_immediate(spark):
     labels = _star_rounds(df, max_iterations=1)  # 1 round must suffice
     got = {r.doc_id: r.component for r in labels.collect()}
     assert got == {0: 0, 1: 0, 2: 0, 3: 0, 4: 0, 5: 0, 10: 10, 11: 10, 12: 10}
-
-
-def test_star_path_equals_minlabel_path(spark):
-    """Both distributed engines converge to the identical labeling on
-    the same graph (broadcast min-label loop vs contraction+star)."""
-    random.seed(33)
-    edges = [(random.randrange(80), random.randrange(80)) for _ in range(150)]
-    edges = [(a, b) for a, b in edges if a != b]
-    pairs = spark.createDataFrame(edges, "doc_a long, doc_b long")
-    star = {
-        (r.doc_id, r.component) for r in _star_path(pairs).collect()
-    }
-    minlabel = {
-        (r.doc_id, r.component)
-        for r in connected_components(
-            pairs, driver_threshold=0, strategy="minlabel"
-        ).collect()
-    }
-    assert star == minlabel
-
-
-def test_unknown_strategy_is_refused(spark):
-    import pytest
-
-    pairs = spark.createDataFrame([(1, 2)], "doc_a long, doc_b long")
-    with pytest.raises(ValueError, match="star|minlabel"):
-        connected_components(pairs, driver_threshold=0, strategy="bogus")
 
 
 def test_star_round_plan_never_joins_an_unbounded_edge_frame(spark):
@@ -199,45 +172,55 @@ def test_star_rounds_output_is_materialized_and_released(spark):
             leaked.append(rid)
     assert leaked == [], f"persisted frames leaked by connected_components: {leaked}"
     assert {r.doc_id: r.component for r in out.collect()} == _driver_union_find(edges)
-    # the minlabel engine follows the same release discipline (r11)
-    out_ml = connected_components(
-        pairs, driver_threshold=0, strategy="minlabel"
+    # the string-id path persists its dense index and follows the same
+    # release discipline
+    str_pairs = spark.createDataFrame(
+        [(f"n{a:02d}", f"n{b:02d}") for a, b in edges],
+        "doc_a string, doc_b string",
     )
-    ml_plan = out_ml._jdf.queryExecution().optimizedPlan().toString()
-    assert "LogicalRDD" in ml_plan, ml_plan
-    after_ml = {
+    out_str = _star_path(str_pairs)
+    str_plan = out_str._jdf.queryExecution().optimizedPlan().toString()
+    assert "LogicalRDD" in str_plan, str_plan
+    after_str = {
         rid for rid in
         spark.sparkContext._jsc.getPersistentRDDs().keySet().toArray()
     }
-    leaked_ml = []
-    for rid in after_ml - after:
+    leaked_str = []
+    for rid in after_str - after:
         rdd = jsc.getPersistentRDDs().get(rid)
         if rdd is not None and not rdd.rdd().isLocallyCheckpointed():
-            leaked_ml.append(rid)
-    assert leaked_ml == [], f"minlabel leaked persisted frames: {leaked_ml}"
-    assert {
-        r.doc_id: r.component for r in out_ml.collect()
-    } == _driver_union_find(edges)
-
-
-def test_cc_star_string_ids_fall_back_to_minlabel(spark):
-    """ADVICE r10: the star engine is int64-only; non-integral ids must
-    route to the minlabel engine (any orderable type) instead of
-    raising inside a task — on BOTH the distributed and driver-gate
-    paths, preserving the caller's id type."""
-    pairs = spark.createDataFrame(
-        [("a", "b"), ("b", "c"), ("x", "y")], "doc_a string, doc_b string"
-    )
-    expect = {"a": "a", "b": "a", "c": "a", "x": "x", "y": "x"}
-    got = {
-        r.doc_id: r.component
-        for r in connected_components(pairs, driver_threshold=0).collect()
+            leaked_str.append(rid)
+    assert leaked_str == [], f"string-id path leaked persisted frames: {leaked_str}"
+    assert {r.doc_id: r.component for r in out_str.collect()} == {
+        f"n{d:02d}": f"n{c:02d}" for d, c in _driver_union_find(edges).items()
     }
-    assert got == expect
-    # driver-gate path: schema was hardcoded "long" before r11
-    gated = connected_components(pairs)
-    assert gated.schema["doc_id"].dataType.simpleString() == "string"
-    assert {r.doc_id: r.component for r in gated.collect()} == expect
+
+
+@pytest.mark.parametrize(
+    "ddl,conv",
+    [
+        ("string", lambda x: f"id-{x:03d}"),
+        ("decimal(20,0)", lambda x: Decimal(10**18 + x)),
+    ],
+    ids=["string", "decimal"],
+)
+def test_cc_star_non_integral_ids_keep_caller_type(spark, ddl, conv):
+    """Non-integral ids run the same star engine through an
+    order-preserving dense long index (distinct ids -> orderBy ->
+    zipWithIndex), so the min index is the min original id. Both the
+    distributed and the driver-gate path return the union-find
+    labeling in the caller's id type."""
+    random.seed(17)
+    raw = [(random.randrange(50), random.randrange(50)) for _ in range(70)]
+    edges = [(conv(a), conv(b)) for a, b in raw]
+    pairs = spark.createDataFrame(
+        edges, f"doc_a {ddl}, doc_b {ddl}"
+    ).repartition(5)
+    expect = _driver_union_find(edges)
+    for out in (_star_path(pairs), connected_components(pairs)):
+        for col in ("doc_id", "component"):
+            assert out.schema[col].dataType.simpleString() == ddl
+        assert {r.doc_id: r.component for r in out.collect()} == expect
 
 
 def test_cc_star_int32_ids_cast_up_to_long(spark):
@@ -332,20 +315,3 @@ def test_cc_telemetry_records_convergence(spark):
     small = spark.createDataFrame([(1, 2), (2, 3)], "doc_a long, doc_b long")
     connected_components(small, telemetry=tel2).collect()
     assert "endgame" not in tel2 or tel2["endgame"] == "driver"
-
-
-def test_cc_minlabel_telemetry_records_convergence(spark):
-    from dataengineering_spark.operators.dedup import connected_components
-
-    df = spark.createDataFrame(
-        [(1, 2), (2, 3), (3, 4), (10, 11)], "doc_a long, doc_b long"
-    )
-    tel: dict = {}
-    connected_components(
-        df, driver_threshold=0, strategy="minlabel", telemetry=tel
-    ).collect()
-    assert tel["endgame"] == "minlabel"
-    assert tel["n_nodes"] == 6
-    traj = tel["minlabel_changed_trajectory"]
-    assert traj[-1] == 0  # reached fixpoint
-    assert all(isinstance(c, int) for c in traj)

@@ -6,6 +6,8 @@ across the input space (ties, duplicates, singletons, empty groups).
 
 from __future__ import annotations
 
+from decimal import Decimal
+
 import duckdb
 import pandas as pd
 from hypothesis import HealthCheck, given, settings
@@ -182,6 +184,13 @@ def test_range_frame_matches_duckdb_interval_window(spark, rows):
     assert got == want
 
 
+_CC_ID_TYPES = {
+    "long": lambda x: x,
+    "string": lambda x: f"v{x:02d}",
+    "decimal(20,0)": lambda x: Decimal(10**18 + x),
+}
+
+
 @settings(
     deadline=None,
     max_examples=8,
@@ -192,46 +201,37 @@ def test_range_frame_matches_duckdb_interval_window(spark, rows):
         st.tuples(st.integers(0, 14), st.integers(0, 14)),
         min_size=1,
         max_size=20,
-    )
+    ),
+    st.sampled_from(sorted(_CC_ID_TYPES)),
 )
-def test_connected_components_match_union_find(spark, edges):
-    """Min-label propagation vs a pure-Python union-find on random
-    graphs — chains, cycles, self-loops, and isolated pairs included;
-    the distributed fixpoint must produce exactly the min-id labeling."""
+def test_connected_components_match_union_find(spark, edges, id_type):
+    """connected_components vs a pure-Python union-find on random
+    graphs — chains, cycles, self-loops, and isolated pairs included —
+    for long ids and for the string/decimal ids the engine maps to an
+    order-preserving dense index: the distributed fixpoint and the
+    driver gate must both produce exactly the min-id labeling, in the
+    caller's id type."""
     from dataengineering_spark.operators.dedup import connected_components
 
-    pairs = spark.createDataFrame(
-        [(a, b) for a, b in edges], "doc_a long, doc_b long"
-    )
-    # driver_threshold=0 forces the distributed engines — the paths
-    # this fuzz exists to cover; the size-gated driver fallback is
-    # checked against the same reference below.
-    got = {
-        (r[0], r[1])
-        for r in connected_components(
-            pairs, driver_threshold=0, strategy="minlabel"
-        ).collect()
-    }
-    got_driver = {
-        (r[0], r[1]) for r in connected_components(pairs).collect()
-    }
-    # the r10 default: partition-forest contraction +
-    # large-star/small-star rounds
-    got_star = {
-        (r[0], r[1])
-        for r in connected_components(pairs, driver_threshold=0).collect()
-    }
+    conv = _CC_ID_TYPES[id_type]
+    edges = [(conv(a), conv(b)) for a, b in edges]
+    pairs = spark.createDataFrame(edges, f"doc_a {id_type}, doc_b {id_type}")
+    # driver_threshold=0 forces partition-forest contraction +
+    # large-star/small-star rounds — the path this fuzz exists to
+    # cover; the default threshold takes the driver gate
+    dist = connected_components(pairs, driver_threshold=0)
+    gated = connected_components(pairs)
 
-    parent: dict[int, int] = {}
+    parent: dict = {}
 
-    def find(x: int) -> int:
+    def find(x):
         parent.setdefault(x, x)
         while parent[x] != x:
             parent[x] = parent[parent[x]]
             x = parent[x]
         return x
 
-    def union(a: int, b: int) -> None:
+    def union(a, b) -> None:
         ra, rb = find(a), find(b)
         if ra != rb:
             parent[max(ra, rb)] = min(ra, rb)
@@ -240,9 +240,10 @@ def test_connected_components_match_union_find(spark, edges):
         union(a, b)
     nodes = {n for e in edges for n in e}
     want = {(n, find(n)) for n in nodes}
-    assert got == want
-    assert got_driver == want
-    assert got_star == want
+    want_type = "bigint" if id_type == "long" else id_type
+    for out in (dist, gated):
+        assert out.schema["doc_id"].dataType.simpleString() == want_type
+        assert {(r[0], r[1]) for r in out.collect()} == want
 
 
 @settings(

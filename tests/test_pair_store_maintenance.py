@@ -51,7 +51,6 @@ def _labels(spark, pairs_dir: str) -> dict[int, int]:
         accumulated_semantic_pairs(spark, pairs_dir),
         id_a="vec_a",
         id_b="vec_b",
-        distinct_edges=False,
     )
     return {r["doc_id"]: r["component"] for r in comp.collect()}
 
@@ -130,7 +129,6 @@ def test_compact_media_pairs_drops_extra_columns_safely(spark, tmp_path):
         .parquet(pairs_dir)
         .select("doc_a", "doc_b")
         .distinct(),
-        distinct_edges=False,
     )
     before_labels = {r["doc_id"]: r["component"] for r in before.collect()}
     stats = compact_pairs_to_forest(
@@ -143,7 +141,7 @@ def test_compact_media_pairs_drops_extra_columns_safely(spark, tmp_path):
         .select("doc_a", "doc_b")
         .distinct()
     )
-    after = connected_components(read_back, distinct_edges=False)
+    after = connected_components(read_back)
     assert {r["doc_id"]: r["component"] for r in after.collect()} == (
         before_labels
     )

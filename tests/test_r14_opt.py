@@ -14,20 +14,52 @@ def _rows(df):
     return sorted(tuple(r) for r in df.collect())
 
 
-def test_rfm_segments_driver_gate_matches_distributed(spark, monkeypatch):
+def _null_metric_events(spark, sf_dir) -> str:
+    """A tiny events corpus with one user whose ts is all NULL (NULL
+    recency) and one whose value is all NULL (NULL money)."""
+    from datetime import datetime
+
+    from dataengineering_spark.catalog import SCHEMAS
+
+    ts = datetime(2024, 1, 20)
+    rows = [
+        (1, ts, 1, "view", 1.5, None),
+        (2, datetime(2024, 1, 5), 2, "view", 3.0, None),
+        (3, datetime(2024, 1, 25), 2, "buy", 7.25, None),
+        (4, datetime(2024, 1, 10), 3, "view", 0.5, None),
+        (5, None, 4, "view", 2.0, None),  # NULL recency
+        (6, None, 4, "buy", 4.0, None),
+        (7, datetime(2024, 1, 30), 5, "view", None, None),  # NULL money
+        (8, datetime(2024, 1, 12), 6, "buy", 9.0, None),
+    ]
+    spark.createDataFrame(rows, SCHEMAS["events"]).coalesce(1).write.parquet(
+        f"{sf_dir}/events.parquet"
+    )
+    return str(sf_dir)
+
+
+def test_rfm_segments_driver_gate_matches_distributed(
+    spark, monkeypatch, tmp_path
+):
     """The rfm quintile-cut driver pull (<=_RFM_DRIVER_MAX users) must
     produce the identical census as the unpivot + keyed discrete_pcts
-    pass (forced via threshold 0)."""
+    pass (forced via threshold 0) — on the fixture corpus and on a
+    corpus with NULL-recency and NULL-money users, which the driver
+    branch once crashed on (int(None)) while the distributed branch
+    ranks NULLs first."""
     from dataengineering_spark.caching import release_tracked
     from dataengineering_spark.plans import queries_segments as qs
 
-    gated = _rows(qs.q_rfm_segments(spark, SF))
-    release_tracked()
-    spark.catalog.clearCache()
-    monkeypatch.setattr(qs, "_RFM_DRIVER_MAX", 0)
-    distributed = _rows(qs.q_rfm_segments(spark, SF))
-    release_tracked()
-    assert gated == distributed and len(gated) > 0
+    for sf_dir in (SF, _null_metric_events(spark, tmp_path)):
+        monkeypatch.setattr(qs, "_RFM_DRIVER_MAX", 100_000)
+        gated = _rows(qs.q_rfm_segments(spark, sf_dir))
+        release_tracked()
+        spark.catalog.clearCache()
+        monkeypatch.setattr(qs, "_RFM_DRIVER_MAX", 0)
+        distributed = _rows(qs.q_rfm_segments(spark, sf_dir))
+        release_tracked()
+        spark.catalog.clearCache()
+        assert gated == distributed and len(gated) > 0, sf_dir
 
 
 def test_global_pct_gate_empty_frame(spark):

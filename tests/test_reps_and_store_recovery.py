@@ -142,7 +142,7 @@ def test_torn_compaction_never_surfaces_partial_pairs(spark, tmp_path):
         tuple(r)
         for r in connected_components(
             accumulated_semantic_pairs(spark, p),
-            id_a="vec_a", id_b="vec_b", distinct_edges=False,
+            id_a="vec_a", id_b="vec_b",
         ).collect()
     }
 
@@ -157,7 +157,7 @@ def test_torn_compaction_never_surfaces_partial_pairs(spark, tmp_path):
         tuple(r)
         for r in connected_components(
             accumulated_semantic_pairs(spark, p),
-            id_a="vec_a", id_b="vec_b", distinct_edges=False,
+            id_a="vec_a", id_b="vec_b",
         ).collect()
     }
     assert got == want  # rolled forward to the forest: same components
@@ -170,7 +170,7 @@ def test_torn_compaction_never_surfaces_partial_pairs(spark, tmp_path):
         tuple(r)
         for r in connected_components(
             accumulated_semantic_pairs(spark, p),
-            id_a="vec_a", id_b="vec_b", distinct_edges=False,
+            id_a="vec_a", id_b="vec_b",
         ).collect()
     }
     assert got == want  # rolled back to the raw pairs
@@ -352,7 +352,7 @@ def test_reps_ingest_join_equals_full_join_on_replicas(spark, tmp_path):
         tuple(r)
         for r in connected_components(
             accumulated_semantic_pairs(spark, d),
-            id_a="vec_a", id_b="vec_b", distinct_edges=False,
+            id_a="vec_a", id_b="vec_b",
         ).collect()
     }
     assert lab(reps_dirs["pairs"]) == lab(full_dirs["pairs"])

@@ -406,7 +406,7 @@ def test_multimodal_stream_with_media_leg_equals_batch(spark, tmp_path):
         ).persist(),
         max_distance=3, sim_col="dhash", bits=64,
     ).select("doc_a", "doc_b")
-    mcomp = connected_components(mpairs, distinct_edges=False)
+    mcomp = connected_components(mpairs)
     # survivor-aware keeper (ADVICE r9): min id among cluster members
     # still present in survivors, mirroring curation_finish
     present = mcomp.join(survivors.select("doc_id"), "doc_id")
@@ -586,7 +586,7 @@ def test_media_cap_policy_authorized_repair_equals_capped_batch(
     )
     assert _rows(store) == _rows(ref_mpairs.distinct())
 
-    mcomp = connected_components(ref_mpairs, distinct_edges=False)
+    mcomp = connected_components(ref_mpairs)
     present = mcomp.join(survivors.select("doc_id"), "doc_id")
     mdropped = (
         present.withColumn(
