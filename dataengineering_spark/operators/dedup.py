@@ -228,6 +228,40 @@ def lsh_bands(
     return banded.select(id_col, "band.band_id", "band.band_sig")
 
 
+def lsh_band_pairs(
+    bands: DataFrame,
+    index: DataFrame | None = None,
+    id_col: str = "doc_id",
+) -> DataFrame:
+    """(doc_a, doc_b) pairs sharing a (band_id, band_sig) bucket of
+    ``lsh_bands`` frames, equi-joined on the bucket key — never
+    all-pairs.
+
+    With ``index`` None: the within-frame banded self-join, id-ordered
+    (doc_a < doc_b) to emit each unordered pair once. With an index
+    band frame: index vs BROADCAST ``bands`` — the incremental shape
+    (``incremental_lsh_matches``): the index is filtered map-side and
+    never shuffles, and pairs are (least, greatest)-ordered so
+    accumulated stream output matches the self-join regardless of
+    arrival order. Multi-band hits repeat a pair; callers ``distinct()``."""
+    if index is None:
+        a, b = bands.alias("a"), bands.alias("b")
+        ida, idb = F.col(f"a.{id_col}"), F.col(f"b.{id_col}")
+        apart, lo, hi = ida < idb, ida, idb
+    else:
+        a, b = index.alias("a"), F.broadcast(bands).alias("b")
+        ida, idb = F.col(f"a.{id_col}"), F.col(f"b.{id_col}")
+        apart, lo, hi = ida != idb, F.least(ida, idb), F.greatest(ida, idb)
+    return a.join(
+        b,
+        on=[
+            F.col("a.band_id") == F.col("b.band_id"),
+            F.col("a.band_sig") == F.col("b.band_sig"),
+            apart,
+        ],
+    ).select(lo.alias("doc_a"), hi.alias("doc_b"))
+
+
 def minhash_lsh_pairs(
     docs: DataFrame,
     id_col: str = "doc_id",
@@ -279,18 +313,14 @@ def minhash_lsh_pairs(
     sigs = minhash_signatures(docs, id_col, text_col, num_hashes, shingle_n)
     b = lsh_bands(sigs, id_col=id_col, bands=bands, num_hashes=num_hashes)
     if max_bucket_size is not None:
-        from pyspark.sql import Window
-
         if cap_policy not in ("drop", "sample"):
             raise ValueError(f"cap_policy must be drop|sample, got {cap_policy!r}")
-        w = Window.partitionBy("band_id", "band_sig")
         if cap_policy == "drop":
-            b = (
-                b.withColumn("bucket_n", F.count(F.lit(1)).over(w))
-                .filter(F.col("bucket_n") <= max_bucket_size)
-                .drop("bucket_n")
-            )
+            b = _drop_hot_buckets(b, ["band_id", "band_sig"], max_bucket_size)
         else:
+            from pyspark.sql import Window
+
+            w = Window.partitionBy("band_id", "band_sig")
             rk = F.row_number().over(
                 w.orderBy(F.md5(F.col(id_col).cast("string")), F.col(id_col))
             )
@@ -300,23 +330,7 @@ def minhash_lsh_pairs(
                 .drop("bucket_rk")
             )
     b = b.persist()
-    left = b.alias("a")
-    right = b.alias("b")
-    pairs = (
-        left.join(
-            right,
-            on=[
-                F.col("a.band_id") == F.col("b.band_id"),
-                F.col("a.band_sig") == F.col("b.band_sig"),
-                F.col(f"a.{id_col}") < F.col(f"b.{id_col}"),
-            ],
-        )
-        .select(
-            F.col(f"a.{id_col}").alias("doc_a"),
-            F.col(f"b.{id_col}").alias("doc_b"),
-        )
-        .distinct()
-    )
+    pairs = lsh_band_pairs(b, id_col=id_col).distinct()
     if materialize:
         pairs = pairs.persist()
         pairs.count()  # one job: signatures -> band cache -> join -> pairs
@@ -982,8 +996,127 @@ def _bq(name: str):
     access (the trailing_range_agg lesson, ADVICE r8)."""
     return F.col("`" + name.replace("`", "``") + "`")
 
+
+def _pigeonhole_chunks(
+    frame: DataFrame,
+    max_distance: int,
+    id_col: str,
+    sim_col: str,
+    bits: int,
+    slot_col: str | None = None,
+) -> DataFrame:
+    """Explode each fingerprint into its ``max_distance + 1`` pigeonhole
+    chunks: (_id, _sh, [_sl,] c, cv) rows, cv the c-th
+    ``bits // (max_distance + 1)``-bit slice of the hash — any two
+    fingerprints within ``max_distance`` bits share at least one
+    (c, cv) exactly. User-supplied names are projected to SAFE internal
+    ones first: they must never reach an F.expr f-string raw."""
+    n_chunks = max_distance + 1
+    chunk_bits = bits // n_chunks
+    mask = (1 << chunk_bits) - 1
+    cols = [_bq(id_col).alias("_id"), _bq(sim_col).alias("_sh")]
+    if slot_col is not None:
+        cols.append(_bq(slot_col).alias("_sl"))
+    return (
+        frame.select(*cols)
+        .select(
+            "*", F.explode(F.sequence(F.lit(0), F.lit(n_chunks - 1))).alias("c")
+        )
+        .select(
+            "*", F.expr(f"shiftright(_sh, {chunk_bits} * c) & {mask}").alias("cv")
+        )
+    )
+
+
+def _drop_hot_buckets(
+    chunks: DataFrame, keys: list[str], max_bucket_size: int | None
+) -> DataFrame:
+    """Drop every ``keys`` bucket over ``max_bucket_size`` rows — a
+    window over the chunk join's own key, so no extra shuffle. None
+    keeps every bucket."""
+    if max_bucket_size is None:
+        return chunks
+    from pyspark.sql import Window
+
+    w = Window.partitionBy(*keys)
+    return (
+        chunks.withColumn("_bn", F.count(F.lit(1)).over(w))
+        .filter(F.col("_bn") <= max_bucket_size)
+        .drop("_bn")
+    )
+
+
+def _pigeonhole_pairs(
+    frame: DataFrame,
+    index: DataFrame | None,
+    max_distance: int,
+    id_col: str,
+    sim_col: str,
+    bits: int,
+    max_bucket_size: int | None,
+    slot_col: str | None = None,
+) -> DataFrame:
+    """The chunk join behind ``simhash_neardup_pairs`` and
+    ``video_neardup_pairs``: distinct (doc_a, doc_b, [_sl,] sh_a, sh_b,
+    hamming) rows whose fingerprints — slot-aligned when ``slot_col``
+    is given — differ in at most ``max_distance`` bits.
+
+    With ``index`` None: the self-join (doc_a < doc_b). With an index
+    frame: index vs BROADCAST ``frame`` chunks, so the index scan is
+    filtered map-side and never shuffles. Ids and hashes come out
+    (least, greatest)-ordered, so accumulated stream output matches
+    the self-join regardless of arrival order, and a replayed epoch
+    whose docs already sit in the index never counts a slot twice."""
+    if index is not None and max_bucket_size is not None:
+        raise ValueError(
+            "max_bucket_size is a whole-corpus cap and cannot be combined "
+            "with an index join; cap the accumulated index in a batch "
+            "re-pair pass instead"
+        )
+    slot = [] if slot_col is None else ["_sl"]
+    keys = [*slot, "c", "cv"]
+
+    def side(chunks: DataFrame, s: str) -> DataFrame:
+        return chunks.select(
+            F.col("_id").alias(f"_i{s}"), F.col("_sh").alias(f"_h{s}"), *keys
+        )
+
+    chunks = _drop_hot_buckets(
+        _pigeonhole_chunks(frame, max_distance, id_col, sim_col, bits, slot_col),
+        keys,
+        max_bucket_size,
+    )
+    ia, ib, ha, hb = (F.col(c) for c in ("_ia", "_ib", "_ha", "_hb"))
+    if index is None:
+        cand = side(chunks, "a").join(side(chunks, "b"), keys).filter(ia < ib)
+        lo, hi, sh_a, sh_b = ia, ib, ha, hb
+    else:
+        index_chunks = _pigeonhole_chunks(
+            index, max_distance, id_col, sim_col, bits, slot_col
+        )
+        cand = (
+            side(index_chunks, "a")
+            .join(F.broadcast(side(chunks, "b")), keys)
+            .filter(ia != ib)
+        )
+        lo, hi = F.least(ia, ib), F.greatest(ia, ib)
+        sh_a = F.when(ia < ib, ha).otherwise(hb)
+        sh_b = F.when(ia < ib, hb).otherwise(ha)
+    hamming = F.expr("bit_count(sh_a ^ sh_b)").cast("int")
+    return (
+        cand.select(
+            lo.alias("doc_a"), hi.alias("doc_b"), *slot,
+            sh_a.alias("sh_a"), sh_b.alias("sh_b"),
+        )
+        .distinct()  # collapse multi-chunk hits of the same (slot) pair
+        .withColumn("hamming", hamming)
+        .filter(F.col("hamming") <= max_distance)
+    )
+
+
 def simhash_neardup_pairs(
     sim: DataFrame,
+    index: DataFrame | None = None,
     max_distance: int = 3,
     id_col: str = "doc_id",
     sim_col: str = "simhash",
@@ -1000,6 +1133,13 @@ def simhash_neardup_pairs(
     space is chunks x 2^(bits/chunks); candidates ~ n^2 / 2^chunk_bits
     per chunk instead of n^2 — same contract as the MinHash band join.
 
+    ``index`` switches to the incremental shape: pairs between a
+    (large, persisted) fingerprint index and the (small, per-epoch)
+    ``sim`` frame, which is BROADCAST so the index never shuffles;
+    pairs come out (least, greatest)-ordered. Ids must be disjoint
+    across the two frames (the epoch contract: every doc belongs to
+    exactly one epoch).
+
     ``max_bucket_size`` is the same 100 TB safety valve as
     ``minhash_lsh_pairs``: a degenerate (chunk, value) bucket of n
     fingerprints yields n^2/2 candidates, and a low-entropy corpus
@@ -1014,50 +1154,11 @@ def simhash_neardup_pairs(
     exact forfeited candidate volume for the same cap, and the
     image_bucket_accounting registry query oracle-checks it. None
     (the default, used by all oracle-checked pair queries) keeps
-    every bucket."""
-    n_chunks = max_distance + 1
-    chunk_bits = bits // n_chunks
-    mask = (1 << chunk_bits) - 1
-    # pre-project to SAFE internal names: id_col/sim_col are
-    # user-supplied and must never reach an F.expr f-string raw
-    safe = sim.select(_bq(id_col).alias("_id"), _bq(sim_col).alias("_sh"))
-    chunks = safe.select(
-        "_id",
-        "_sh",
-        F.explode(F.sequence(F.lit(0), F.lit(n_chunks - 1))).alias("c"),
-    ).select(
-        "_id",
-        "_sh",
-        "c",
-        F.expr(f"shiftright(_sh, {chunk_bits} * c) & {mask}").alias("cv"),
-    )
-    if max_bucket_size is not None:
-        from pyspark.sql import Window
-
-        w = Window.partitionBy("c", "cv")
-        chunks = (
-            chunks.withColumn("_bn", F.count(F.lit(1)).over(w))
-            .filter(F.col("_bn") <= max_bucket_size)
-            .drop("_bn")
-        )
-    a = chunks.select(
-        F.col("_id").alias("doc_a"), F.col("_sh").alias("sh_a"), "c", "cv"
-    )
-    b = chunks.select(
-        F.col("_id").alias("doc_b"), F.col("_sh").alias("sh_b"), "c", "cv"
-    )
-    cand = (
-        a.join(b, on=["c", "cv"])
-        .filter(F.col("doc_a") < F.col("doc_b"))
-        .select("doc_a", "doc_b", "sh_a", "sh_b")
-        .distinct()
-    )
-    hamming = F.expr("bit_count(sh_a ^ sh_b)").cast("int")
-    return (
-        cand.withColumn("hamming", hamming)
-        .filter(F.col("hamming") <= max_distance)
-        .select("doc_a", "doc_b", "hamming")
-    )
+    every bucket. The cap is a function of whole-corpus bucket sizes,
+    so passing it with ``index`` raises ``ValueError``."""
+    return _pigeonhole_pairs(
+        sim, index, max_distance, id_col, sim_col, bits, max_bucket_size
+    ).select("doc_a", "doc_b", "hamming")
 
 
 def pigeonhole_bucket_stats(
@@ -1080,15 +1181,7 @@ def pigeonhole_bucket_stats(
     in this chunk; a forfeited CANDIDATE is only a lost PAIR if no
     other chunk recovers it). O(#buckets) aggregate on the join's own
     key — no pair is ever materialized."""
-    n_chunks = max_distance + 1
-    chunk_bits = bits // n_chunks
-    mask = (1 << chunk_bits) - 1
-    safe = sim.select(_bq(id_col).alias("_id"), _bq(sim_col).alias("_sh"))
-    chunks = safe.select(
-        "_id",
-        F.explode(F.sequence(F.lit(0), F.lit(n_chunks - 1))).alias("c"),
-        F.expr(f"shiftright(_sh, {chunk_bits} * c) & {mask}").alias("cv"),
-    )
+    chunks = _pigeonhole_chunks(sim, max_distance, id_col, sim_col, bits)
     buckets = chunks.groupBy("c", "cv").agg(F.count(F.lit(1)).alias("n"))
     hot = F.col("n") > max_bucket_size
     return (
@@ -1117,70 +1210,9 @@ def pigeonhole_bucket_stats(
     )
 
 
-def simhash_neardup_cross_pairs(
-    index_sim: DataFrame,
-    batch_sim: DataFrame,
-    max_distance: int = 3,
-    id_col: str = "doc_id",
-    sim_col: str = "simhash",
-    bits: int = 32,
-) -> DataFrame:
-    """Cross-frame variant of :func:`simhash_neardup_pairs`: pairs
-    between a (large, persisted) ``index_sim`` and a (small, per-epoch)
-    ``batch_sim`` — the streaming incremental shape. The batch side's
-    chunk frame is BROADCAST, so the index scan is filtered map-side
-    and never shuffles; pairs come out (least, greatest)-ordered so
-    stream-accumulated output matches the batch self-join regardless
-    of arrival order. Ids must be disjoint across the two frames (the
-    epoch contract: every doc belongs to exactly one epoch)."""
-    n_chunks = max_distance + 1
-    chunk_bits = bits // n_chunks
-    mask = (1 << chunk_bits) - 1
-
-    def _chunks(frame: DataFrame) -> DataFrame:
-        # safe internal names — see simhash_neardup_pairs
-        return frame.select(
-            _bq(id_col).alias("_id"), _bq(sim_col).alias("_sh")
-        ).select(
-            "_id",
-            "_sh",
-            F.explode(F.sequence(F.lit(0), F.lit(n_chunks - 1))).alias("c"),
-        ).select(
-            "_id",
-            "_sh",
-            "c",
-            F.expr(f"shiftright(_sh, {chunk_bits} * c) & {mask}").alias("cv"),
-        )
-
-    i = _chunks(index_sim).select(
-        F.col("_id").alias("_ia"), F.col("_sh").alias("sh_a"), "c", "cv"
-    )
-    b = F.broadcast(
-        _chunks(batch_sim).select(
-            F.col("_id").alias("_ib"), F.col("_sh").alias("sh_b"), "c", "cv"
-        )
-    )
-    cand = (
-        i.join(b, on=["c", "cv"])
-        .filter(F.col("_ia") != F.col("_ib"))
-        .select(
-            F.least("_ia", "_ib").alias("doc_a"),
-            F.greatest("_ia", "_ib").alias("doc_b"),
-            F.col("sh_a"),
-            F.col("sh_b"),
-        )
-        .distinct()
-    )
-    hamming = F.expr("bit_count(sh_a ^ sh_b)").cast("int")
-    return (
-        cand.withColumn("hamming", hamming)
-        .filter(F.col("hamming") <= max_distance)
-        .select("doc_a", "doc_b", "hamming")
-    )
-
-
 def video_neardup_pairs(
     frame_hashes: DataFrame,
+    index: DataFrame | None = None,
     max_distance: int = 3,
     min_matching: int = 3,
     id_col: str = "doc_id",
@@ -1199,123 +1231,21 @@ def video_neardup_pairs(
     stays O(Σ bucket²) per slot, never all-pairs across videos, never
     across slots.
 
+    ``index`` switches to the incremental shape of
+    ``simhash_neardup_pairs``: a persisted frame-hash index vs the
+    BROADCAST per-epoch ``frame_hashes``. A video's whole fingerprint
+    lands in one epoch, so every matching slot of a cross-epoch pair
+    meets in the same join.
+
     ``max_bucket_size`` caps degenerate (slot, chunk, value) buckets
     before the self-join — the same priced safety valve as
     ``simhash_neardup_pairs`` (think: black frames at slot 0 across a
-    whole corpus). Default None keeps every bucket (the oracle-checked
+    whole corpus), and like it refused together with ``index``.
+    Default None keeps every bucket (the oracle-checked
     configuration)."""
-    n_chunks = max_distance + 1
-    chunk_bits = bits // n_chunks
-    mask = (1 << chunk_bits) - 1
-    safe = frame_hashes.select(
-        _bq(id_col).alias("_id"),
-        _bq(slot_col).alias("_sl"),
-        _bq(sim_col).alias("_sh"),
-    )
-    chunks = safe.select(
-        "_id",
-        "_sl",
-        "_sh",
-        F.explode(F.sequence(F.lit(0), F.lit(n_chunks - 1))).alias("c"),
-    ).select(
-        "_id",
-        "_sl",
-        "_sh",
-        "c",
-        F.expr(f"shiftright(_sh, {chunk_bits} * c) & {mask}").alias("cv"),
-    )
-    if max_bucket_size is not None:
-        from pyspark.sql import Window
-
-        w = Window.partitionBy("_sl", "c", "cv")
-        chunks = (
-            chunks.withColumn("_bn", F.count(F.lit(1)).over(w))
-            .filter(F.col("_bn") <= max_bucket_size)
-            .drop("_bn")
-        )
-    a = chunks.select(
-        F.col("_id").alias("doc_a"), F.col("_sh").alias("sh_a"), "_sl", "c", "cv"
-    )
-    b = chunks.select(
-        F.col("_id").alias("doc_b"), F.col("_sh").alias("sh_b"), "_sl", "c", "cv"
-    )
-    slot_pairs = (
-        a.join(b, on=["_sl", "c", "cv"])
-        .filter(F.col("doc_a") < F.col("doc_b"))
-        .select("doc_a", "doc_b", "_sl", "sh_a", "sh_b")
-        .distinct()  # collapse multi-chunk hits of the same slot pair
-        .filter(F.expr("bit_count(sh_a ^ sh_b)") <= max_distance)
-    )
-    return (
-        slot_pairs.groupBy("doc_a", "doc_b")
-        .agg(F.count(F.lit(1)).cast("int").alias("n_match"))
-        .filter(F.col("n_match") >= min_matching)
-    )
-
-
-def video_neardup_cross_pairs(
-    index_fh: DataFrame,
-    batch_fh: DataFrame,
-    max_distance: int = 3,
-    min_matching: int = 3,
-    id_col: str = "doc_id",
-    slot_col: str = "slot",
-    sim_col: str = "dhash",
-    bits: int = 64,
-) -> DataFrame:
-    """Cross-frame variant of :func:`video_neardup_pairs` — pairs
-    between a (large, persisted) frame-hash ``index_fh`` and a (small,
-    per-epoch) ``batch_fh``, the streaming incremental shape. The
-    batch side's chunk frame is BROADCAST so the index scan filters
-    map-side and never shuffles; pairs come out (least, greatest)-
-    ordered so stream-accumulated output matches the batch self-join.
-    Ids must be disjoint across the frames (the epoch contract)."""
-    n_chunks = max_distance + 1
-    chunk_bits = bits // n_chunks
-    mask = (1 << chunk_bits) - 1
-
-    def _chunks(frame: DataFrame) -> DataFrame:
-        return frame.select(
-            _bq(id_col).alias("_id"),
-            _bq(slot_col).alias("_sl"),
-            _bq(sim_col).alias("_sh"),
-        ).select(
-            "_id",
-            "_sl",
-            "_sh",
-            F.explode(F.sequence(F.lit(0), F.lit(n_chunks - 1))).alias("c"),
-        ).select(
-            "_id",
-            "_sl",
-            "_sh",
-            "c",
-            F.expr(f"shiftright(_sh, {chunk_bits} * c) & {mask}").alias("cv"),
-        )
-
-    i = _chunks(index_fh).select(
-        F.col("_id").alias("_ia"), F.col("_sh").alias("sh_a"), "_sl", "c", "cv"
-    )
-    b = F.broadcast(
-        _chunks(batch_fh).select(
-            F.col("_id").alias("_ib"), F.col("_sh").alias("sh_b"), "_sl", "c", "cv"
-        )
-    )
-    slot_pairs = (
-        i.join(b, on=["_sl", "c", "cv"])
-        .filter(F.col("_ia") != F.col("_ib"))
-        .select(
-            F.least("_ia", "_ib").alias("doc_a"),
-            F.greatest("_ia", "_ib").alias("doc_b"),
-            "_sl",
-            F.when(F.col("_ia") < F.col("_ib"), F.col("sh_a"))
-            .otherwise(F.col("sh_b"))
-            .alias("sh_a"),
-            F.when(F.col("_ia") < F.col("_ib"), F.col("sh_b"))
-            .otherwise(F.col("sh_a"))
-            .alias("sh_b"),
-        )
-        .distinct()
-        .filter(F.expr("bit_count(sh_a ^ sh_b)") <= max_distance)
+    slot_pairs = _pigeonhole_pairs(
+        frame_hashes, index, max_distance, id_col, sim_col, bits,
+        max_bucket_size, slot_col=slot_col,
     )
     return (
         slot_pairs.groupBy("doc_a", "doc_b")
@@ -1698,19 +1628,9 @@ def verify_rate_stats(
     bucket quadratically and bias the rate. Expected cost is
     kept_volume / bucket_sample candidate occurrences streamed through
     one codegen aggregate; nothing persists."""
-    n_chunks = max_distance + 1
-    chunk_bits = bits // n_chunks
-    mask = (1 << chunk_bits) - 1
-    cols = [_bq(id_col).alias("_id"), _bq(sim_col).alias("_sh")]
-    keys = ["c", "cv"]
-    if slot_col is not None:
-        cols.append(_bq(slot_col).alias("_sl"))
-        keys = ["_sl", "c", "cv"]
-    safe = sim.select(*cols)
-    chunks = safe.select(
-        "*", F.explode(F.sequence(F.lit(0), F.lit(n_chunks - 1))).alias("c")
-    ).select(
-        "*", F.expr(f"shiftright(_sh, {chunk_bits} * c) & {mask}").alias("cv")
+    keys = ["c", "cv"] if slot_col is None else ["_sl", "c", "cv"]
+    chunks = _pigeonhole_chunks(
+        sim, max_distance, id_col, sim_col, bits, slot_col
     )
     if bucket_sample > 1:
         chunks = chunks.filter(
@@ -1719,15 +1639,7 @@ def verify_rate_stats(
             )
             == 0
         )
-    if max_bucket_size is not None:
-        from pyspark.sql import Window
-
-        w = Window.partitionBy(*keys)
-        chunks = (
-            chunks.withColumn("_bn", F.count(F.lit(1)).over(w))
-            .filter(F.col("_bn") <= max_bucket_size)
-            .drop("_bn")
-        )
+    chunks = _drop_hot_buckets(chunks, keys, max_bucket_size)
     a = chunks.select(
         F.col("_id").alias("_ida"), F.col("_sh").alias("sh_a"), *keys
     )
@@ -1897,24 +1809,9 @@ def authorize_pigeonhole_cap(
     numbers, never a mid-job disk-death. O(#buckets) driver state plus
     one streamed sample aggregate per cap considered; no pair is ever
     materialized."""
-    n_chunks = max_distance + 1
-    chunk_bits = bits // n_chunks
-    mask = (1 << chunk_bits) - 1
-    cols = [_bq(sim_col).alias("_sh")]
-    keys = ["c", "cv"]
-    if slot_col is not None:
-        cols.append(_bq(slot_col).alias("_sl"))
-        keys = ["_sl", "c", "cv"]
+    keys = ["c", "cv"] if slot_col is None else ["_sl", "c", "cv"]
     buckets = (
-        sim.select(*cols)
-        .select(
-            "*",
-            F.explode(F.sequence(F.lit(0), F.lit(n_chunks - 1))).alias("c"),
-        )
-        .select(
-            "*",
-            F.expr(f"shiftright(_sh, {chunk_bits} * c) & {mask}").alias("cv"),
-        )
+        _pigeonhole_chunks(sim, max_distance, id_col, sim_col, bits, slot_col)
         .groupBy(*keys)
         .agg(F.count(F.lit(1)).alias("n"))
         .persist()
@@ -2015,7 +1912,7 @@ def semantic_cell_stats(
 
 def semantic_candidate_pairs(
     cells: DataFrame,
-    index_cells: DataFrame | None = None,
+    index: DataFrame | None = None,
     threshold: float = 0.35,
 ) -> DataFrame:
     """(vec_a, vec_b) pairs with cosine >= threshold, cell-local.
@@ -2024,7 +1921,7 @@ def semantic_candidate_pairs(
     ``dot >= t·sqrt(dd_a·dd_b)`` is the exact tree the DuckDB oracle
     replays (sqrt of the product, not sqrt·sqrt).
 
-    With ``index_cells`` None: the within-frame self-join
+    With ``index`` None: the within-frame self-join
     (vec_a < vec_b) batch semantic_dedup runs. With an index frame:
     index vs BROADCAST batch cells — the streaming cross-epoch shape
     (streaming/semdedup.py); the index side is filtered map-side on
@@ -2039,7 +1936,7 @@ def semantic_candidate_pairs(
         F.col("dd").alias("dda"),
         "cid",
     )
-    if index_cells is None:
+    if index is None:
         b = cells.select(
             F.col("vec_id").alias("vec_b"),
             F.col("v").alias("vb"),
@@ -2049,7 +1946,7 @@ def semantic_candidate_pairs(
         base = a.join(b, "cid").filter(F.col("vec_a") < F.col("vec_b"))
         lo, hi = F.col("vec_a"), F.col("vec_b")
     else:
-        i = index_cells.select(
+        i = index.select(
             F.col("vec_id").alias("vec_b"),
             F.col("v").alias("vb"),
             F.col("dd").alias("ddb"),

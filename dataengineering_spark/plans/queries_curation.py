@@ -910,7 +910,7 @@ def q_semantic_reps_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
         cells2, threshold=SEM_THRESHOLD
     ).unionByName(
         semantic_candidate_pairs(
-            cells2, index_cells=reps_cells, threshold=SEM_THRESHOLD
+            cells2, index=reps_cells, threshold=SEM_THRESHOLD
         )
     )
     all_pairs = forest_pairs.select(

@@ -29,6 +29,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
 from dataengineering_spark.plans.queries_eval import variant_counts, ztest_output
+from dataengineering_spark.streaming.structured import run_foreach_batch
 
 _PARTIAL_SCHEMA = "epoch_id long, variant long, n long, c long"
 
@@ -62,15 +63,11 @@ def abtest_stream(
     stream: DataFrame,
     partials_path: str,
     checkpoint_dir: str,
-    trigger_once: bool = True,
 ) -> StreamingQuery:
     """Wire an event stream into the partials loop."""
-    writer = stream.writeStream.foreachBatch(
-        abtest_batch_fn(partials_path)
-    ).option("checkpointLocation", checkpoint_dir)
-    if trigger_once:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return run_foreach_batch(
+        stream, abtest_batch_fn(partials_path), checkpoint_dir
+    )
 
 
 def abtest_counts(spark: SparkSession, partials_path: str) -> DataFrame:

@@ -45,6 +45,7 @@ from dataengineering_spark.operators.similarity import (
     pq_query_luts,
     topk_per_query,
 )
+from dataengineering_spark.streaming.structured import run_foreach_batch
 
 
 def save_encoded_corpus(enc: DataFrame, path: str) -> None:
@@ -168,7 +169,6 @@ def ann_serve_stream(
     index: "tuple[list, dict]",
     out_path: str,
     checkpoint_dir: str,
-    trigger_once: bool = True,
     **serve_kwargs,
 ) -> StreamingQuery:
     """Wire a query-vector stream into the serve loop. Returns the
@@ -176,12 +176,7 @@ def ann_serve_stream(
     results (distinct on the result columns — epoch replays append
     identical rows) from ``out_path``."""
     batch_fn = ann_serve_batch_fn(enc_path, index, out_path, **serve_kwargs)
-    writer = stream.writeStream.foreachBatch(batch_fn).option(
-        "checkpointLocation", checkpoint_dir
-    )
-    if trigger_once:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return run_foreach_batch(stream, batch_fn, checkpoint_dir)
 
 
 def ann_ingest_batch_fn(
@@ -237,19 +232,13 @@ def ann_ingest_stream(
     enc_path: str,
     index: "tuple[list, dict]",
     checkpoint_dir: str,
-    trigger_once: bool = True,
     **ingest_kwargs,
 ) -> StreamingQuery:
     """Wire a corpus-vector stream into the ingest loop — the
     complement of :func:`ann_serve_stream`: together they are the full
     train-once / ingest-forever / serve-forever contract."""
     batch_fn = ann_ingest_batch_fn(enc_path, index, **ingest_kwargs)
-    writer = stream.writeStream.foreachBatch(batch_fn).option(
-        "checkpointLocation", checkpoint_dir
-    )
-    if trigger_once:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return run_foreach_batch(stream, batch_fn, checkpoint_dir)
 
 
 def ingest_cell_stats(spark: SparkSession, stats_path: str) -> DataFrame:

@@ -31,6 +31,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
 from dataengineering_spark.operators.contamination import benchmark_overlap
+from dataengineering_spark.streaming.structured import run_foreach_batch
 
 
 def decontaminate_batch_fn(
@@ -71,18 +72,12 @@ def decontaminate_stream(
     n: int = 8,
     id_col: str = "doc_id",
     text_col: str = "text",
-    trigger_once: bool = True,
 ) -> StreamingQuery:
     """Wire a document stream through the contamination gate."""
     batch_fn = decontaminate_batch_fn(
         benchmark, clean_dir, quarantine_dir, n=n, id_col=id_col, text_col=text_col
     )
-    writer = stream.writeStream.foreachBatch(batch_fn).option(
-        "checkpointLocation", checkpoint_dir
-    )
-    if trigger_once:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return run_foreach_batch(stream, batch_fn, checkpoint_dir)
 
 
 def quarantined(spark: SparkSession, quarantine_dir: str) -> DataFrame:

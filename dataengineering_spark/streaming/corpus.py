@@ -29,6 +29,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
+from dataengineering_spark.streaming.structured import run_foreach_batch
+
 
 def _epoch_partial(batch: DataFrame, epoch_id: int) -> DataFrame:
     return (
@@ -66,15 +68,11 @@ def corpus_stats_stream(
     stream: DataFrame,
     partials_path: str,
     checkpoint_dir: str,
-    trigger_once: bool = True,
 ) -> StreamingQuery:
     """Wire a document stream into the partials loop."""
-    writer = stream.writeStream.foreachBatch(
-        corpus_stats_batch_fn(partials_path)
-    ).option("checkpointLocation", checkpoint_dir)
-    if trigger_once:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return run_foreach_batch(
+        stream, corpus_stats_batch_fn(partials_path), checkpoint_dir
+    )
 
 
 def corpus_stats_snapshot(

@@ -41,6 +41,8 @@ are the batch operators with their documented 100 TB shapes.
 
 from __future__ import annotations
 
+from functools import partial
+
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
@@ -49,17 +51,26 @@ from dataengineering_spark.operators.contamination import benchmark_overlap
 from dataengineering_spark.operators.dedup import (
     connected_components,
     semantic_candidate_pairs,
+    simhash_neardup_pairs,
 )
 from dataengineering_spark.streaming.dsir import (
     dsir_partials_batch_fn,
     dsir_score_against_snapshot,
 )
-from dataengineering_spark.streaming.lsh import _path_exists
 from dataengineering_spark.streaming.semdedup import (
     CELL_INDEX_SCHEMA,
     _batch_cells,
     accumulated_semantic_pairs,
 )
+from dataengineering_spark.streaming.store import (
+    atomic_rewrite,
+    index_epoch,
+    recover_store,
+    store_exists,
+)
+from dataengineering_spark.streaming.structured import run_foreach_batch
+
+MEDIA_INDEX_SCHEMA = "doc_id long, dhash long"
 
 
 def curation_pipeline_batch_fn(
@@ -95,14 +106,16 @@ def curation_pipeline_batch_fn(
     boundaries — with rejects routed to the audit sink and only
     keepers feeding the dedup index and the DSIR corpus model.
 
-    ``media_payload_col`` (+ ``media_index_dir``/``media_pairs_dir``)
-    enables the perceptual MEDIA dedup leg: the clean slice's image
-    payloads run the streaming dHash index loop
-    (``streaming/media_dedup`` shape — intra-batch pigeonhole
-    self-join plus cross-batch join against the persisted fingerprint
-    index). Accumulated media pairs feed ``curation_finish``'s media
-    keep-rule at drain time, so a document can be dropped for LOOKING
-    like an earlier one even when its text and embedding survive.
+    Both dedup legs are one ``streaming/store.index_epoch`` each: the
+    clean slice's cells (``semantic_candidate_pairs``) and, with
+    ``media_payload_col`` (+ ``media_index_dir``/``media_pairs_dir``),
+    the perceptual MEDIA leg: the clean slice's image payloads run the
+    streaming dHash index loop (``streaming/media_dedup`` shape —
+    ``simhash_neardup_pairs`` with and without the persisted
+    fingerprint index). Accumulated media pairs feed
+    ``curation_finish``'s media keep-rule at drain time, so a document
+    can be dropped for LOOKING like an earlier one even when its text
+    and embedding survive.
 
     ``compact_every=k`` runs :func:`compact_pairs_to_forest` on the
     pair store(s) after every k-th epoch — the bounded-state
@@ -151,8 +164,6 @@ def curation_pipeline_batch_fn(
         # heal any store torn by a crash mid-maintenance BEFORE this
         # epoch appends (an append would otherwise recreate the live
         # dir and recovery would later reap the rolled-aside original)
-        from dataengineering_spark.streaming.store import recover_store
-
         for d in (pairs_dir, media_pairs_dir, reps_index_dir,
                   media_reps_index_dir):
             if d is not None:
@@ -187,84 +198,41 @@ def curation_pipeline_batch_fn(
             clean.drop(
                 vec_col, *([media_payload_col] if media_payload_col else [])
             ).write.mode("append").parquet(clean_dir)
-            # SemDeDup leg — clean slice only
-            cells = _batch_cells(clean, cent_rows, id_col, vec_col).persist()
-            try:
-                pairs = semantic_candidate_pairs(cells, threshold=threshold)
-                # reps mode: join the representatives index (one row
-                # per known component + everything since the last
-                # compaction) instead of the full accumulated index
-                join_dir = (
-                    reps_index_dir
-                    if reps_index_dir is not None
-                    and _path_exists(spark, reps_index_dir)
-                    else index_dir
-                )
-                if _path_exists(spark, join_dir):
-                    index_cells = spark.read.schema(CELL_INDEX_SCHEMA).parquet(
-                        join_dir
-                    )
-                    pairs = pairs.unionByName(
-                        semantic_candidate_pairs(
-                            cells, index_cells=index_cells, threshold=threshold
-                        )
-                    )
-                pairs.distinct().write.mode("append").parquet(pairs_dir)
-                cells_out = cells.select("vec_id", "cid", "v", "dd")
-                cells_out.write.mode("append").parquet(index_dir)
-                if reps_index_dir is not None:
-                    # new rows stay individually matchable until the
-                    # next refresh folds them into components
-                    cells_out.write.mode("append").parquet(reps_index_dir)
-            finally:
-                cells.unpersist()
+            # SemDeDup leg — clean slice only. Reps mode joins the
+            # representatives index (one row per known component +
+            # everything since the last compaction) instead of the full
+            # accumulated index
+            index_epoch(
+                _batch_cells(clean, cent_rows, id_col, vec_col),
+                partial(semantic_candidate_pairs, threshold=threshold),
+                index_dir,
+                pairs_dir,
+                CELL_INDEX_SCHEMA,
+                reps_index_dir=reps_index_dir,
+            )
             # media dedup leg — clean slice's payloads through the
             # incremental fingerprint index (streaming/media_dedup)
             if media_payload_col is not None:
                 from dataengineering_spark.functions.multimodal import (
                     dhash_images,
                 )
-                from dataengineering_spark.operators.dedup import (
-                    simhash_neardup_cross_pairs,
-                    simhash_neardup_pairs,
-                )
 
-                fp = dhash_images(
-                    clean.select(
-                        F.col(id_col).alias("doc_id"),
-                        F.col(media_payload_col).alias("payload"),
-                    )
-                ).persist()
-                try:
-                    mpairs = simhash_neardup_pairs(
-                        fp, max_distance=3, sim_col="dhash", bits=64
-                    )
-                    mjoin_dir = (
-                        media_reps_index_dir
-                        if media_reps_index_dir is not None
-                        and _path_exists(spark, media_reps_index_dir)
-                        else media_index_dir
-                    )
-                    if _path_exists(spark, mjoin_dir):
-                        midx = spark.read.schema(
-                            "doc_id long, dhash long"
-                        ).parquet(mjoin_dir)
-                        mpairs = mpairs.unionByName(
-                            simhash_neardup_cross_pairs(
-                                midx, fp, max_distance=3,
-                                sim_col="dhash", bits=64,
-                            )
+                index_epoch(
+                    dhash_images(
+                        clean.select(
+                            F.col(id_col).alias("doc_id"),
+                            F.col(media_payload_col).alias("payload"),
                         )
-                    mpairs.distinct().write.mode("append").parquet(
-                        media_pairs_dir
-                    )
-                    fp.write.mode("append").parquet(media_index_dir)
-                    if media_reps_index_dir is not None:
-                        fp.select("doc_id", "dhash").write.mode(
-                            "append"
-                        ).parquet(media_reps_index_dir)
-                finally:
-                    fp.unpersist()
+                    ),
+                    partial(
+                        simhash_neardup_pairs, max_distance=3,
+                        sim_col="dhash", bits=64,
+                    ),
+                    media_index_dir,
+                    media_pairs_dir,
+                    MEDIA_INDEX_SCHEMA,
+                    reps_index_dir=media_reps_index_dir,
+                )
             # DSIR leg — model the clean corpus only
             dsir_fn(clean, epoch_id)
             # pair-store maintenance window (r12): contract the
@@ -284,7 +252,7 @@ def curation_pipeline_batch_fn(
                         refresh_reps_index(
                             spark, media_pairs_dir, media_index_dir,
                             media_reps_index_dir,
-                            index_schema="doc_id long, dhash long",
+                            index_schema=MEDIA_INDEX_SCHEMA,
                             index_id_col="doc_id",
                             a_col="doc_a", b_col="doc_b",
                         )
@@ -307,7 +275,6 @@ def curation_pipeline_stream(
     checkpoint_dir: str,
     n: int = 8,
     threshold: float = 0.35,
-    trigger_once: bool = True,
     **col_kwargs,
 ) -> StreamingQuery:
     """Wire a pre-joined (documents ⋈ embeddings) stream through the
@@ -324,12 +291,7 @@ def curation_pipeline_stream(
         threshold=threshold,
         **col_kwargs,
     )
-    writer = stream.writeStream.foreachBatch(batch_fn).option(
-        "checkpointLocation", checkpoint_dir
-    )
-    if trigger_once:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return run_foreach_batch(stream, batch_fn, checkpoint_dir)
 
 
 def pairs_to_forest_frame(
@@ -434,11 +396,6 @@ def compact_pairs_to_forest(
     at ANY point leaves either the old store or the new one, never a
     partial edge set.  Returns ``{"rows_before", "rows_after",
     "passes"}``."""
-    from dataengineering_spark.streaming.store import (
-        atomic_rewrite,
-        store_exists,
-    )
-
     if not store_exists(spark, pairs_dir):
         return {"rows_before": 0, "rows_after": 0, "passes": 0}
     edges = (
@@ -481,11 +438,6 @@ def repair_accumulated_semantic_pairs(
     torn pairs store is one call away from whole again, no payload or
     embedding re-read (the index already carries the vectors).
     Returns the rewritten pair count."""
-    from dataengineering_spark.streaming.store import (
-        atomic_rewrite,
-        store_exists,
-    )
-
     if not store_exists(spark, index_dir):
         return 0
     cells = (
@@ -542,11 +494,6 @@ def refresh_reps_index(
     refreshes, the ingest loop appends each epoch's new rows to BOTH
     indexes, so not-yet-compacted documents stay individually
     matchable.  Returns ``{"index_rows", "reps_rows"}``."""
-    from dataengineering_spark.streaming.store import (
-        atomic_rewrite,
-        store_exists,
-    )
-
     full = spark.read.schema(index_schema).parquet(index_dir).distinct()
     if store_exists(spark, pairs_dir):
         comp = connected_components(
@@ -731,8 +678,6 @@ def curation_finish(
             surv_ids.select(F.col("vec_id").alias(id_col)), id_col
         )
     )
-    from dataengineering_spark.streaming.store import store_exists
-
     if media_pairs_dir is not None and store_exists(spark, media_pairs_dir):
         # media keep-rule: min doc id per perceptual-dup cluster keeps,
         # chosen AMONG DOCS STILL PRESENT IN SURVIVORS (ADVICE r9): the

@@ -37,6 +37,7 @@ from dataengineering_spark.operators.sketches import (
     hll_merge_sketches,
     hll_sketch_by,
 )
+from dataengineering_spark.streaming.structured import run_foreach_batch
 
 _LGK = 12
 
@@ -70,15 +71,11 @@ def distinct_stream(
     stream: DataFrame,
     partials_path: str,
     checkpoint_dir: str,
-    trigger_once: bool = True,
 ) -> StreamingQuery:
     """Wire an event stream into the sketch-partials loop."""
-    writer = stream.writeStream.foreachBatch(
-        distinct_batch_fn(partials_path)
-    ).option("checkpointLocation", checkpoint_dir)
-    if trigger_once:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return run_foreach_batch(
+        stream, distinct_batch_fn(partials_path), checkpoint_dir
+    )
 
 
 def distinct_snapshot(spark: SparkSession, partials_path: str) -> DataFrame:

@@ -36,6 +36,7 @@ from dataengineering_spark.plans.queries_curation import (
     dsir_bucket_frame,
     dsir_scores,
 )
+from dataengineering_spark.streaming.structured import run_foreach_batch
 
 
 def dsir_partials_batch_fn(partials_path: str):
@@ -58,15 +59,11 @@ def dsir_partials_stream(
     stream: DataFrame,
     partials_path: str,
     checkpoint_dir: str,
-    trigger_once: bool = True,
 ) -> StreamingQuery:
     """Wire a document stream into the partials loop."""
-    writer = stream.writeStream.foreachBatch(
-        dsir_partials_batch_fn(partials_path)
-    ).option("checkpointLocation", checkpoint_dir)
-    if trigger_once:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return run_foreach_batch(
+        stream, dsir_partials_batch_fn(partials_path), checkpoint_dir
+    )
 
 
 def dsir_counts_snapshot(spark: SparkSession, partials_path: str) -> DataFrame:

@@ -5,15 +5,17 @@ completing the streaming story the exact/content tier started in
 
 Shape: a persisted BAND INDEX (parquet table of (doc_id, band_id,
 band_sig) rows, exactly ``operators/dedup.lsh_bands`` output) plus a
-``foreachBatch`` loop.  Each micro-batch:
+``foreachBatch`` loop.  Each micro-batch is one
+``streaming/store.index_epoch`` over its band frame with
+``operators/dedup.lsh_band_pairs`` as the pair operator:
 
 1. computes the batch's band frame ONCE (persisted for the epoch);
 2. emits intra-batch candidate pairs via the banded self-join — the
    same equi-join shape as ``minhash_lsh_pairs``, never all-pairs;
 3. emits cross-batch candidates by joining the persisted index against
-   the BROADCAST batch bands — the ``incremental_lsh_matches`` scale
-   shape (``operators/dedup.py:663``): the 100 TB index is filtered
-   map-side and never shuffles;
+   the BROADCAST batch bands — the scale shape of
+   ``operators/dedup.incremental_lsh_matches``: the 100 TB index is
+   filtered map-side and never shuffles;
 4. appends the batch bands to the index, so later batches see them.
 
 Because every document belongs to exactly one epoch, each (a, b) pair
@@ -40,84 +42,23 @@ LLM-pipeline extension tier.
 
 from __future__ import annotations
 
+from functools import partial
+
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
 from dataengineering_spark.operators.dedup import (
     DEFAULT_BANDS,
     DEFAULT_NUM_HASHES,
     DEFAULT_SHINGLE,
+    lsh_band_pairs,
     lsh_bands,
     minhash_signatures,
 )
+from dataengineering_spark.streaming.store import index_epoch
+from dataengineering_spark.streaming.structured import run_foreach_batch
 
 INDEX_SCHEMA = "doc_id long, band_id int, band_sig string"
-
-
-def _path_exists(spark: SparkSession, path: str) -> bool:
-    """Index-existence probe through the Hadoop FS API so it works on
-    any filesystem the session can read (local, HDFS, object stores) —
-    reading a nonexistent parquet path fails lazily at action time,
-    too late to branch on."""
-    jvm = spark.sparkContext._jvm
-    hpath = jvm.org.apache.hadoop.fs.Path(path)
-    fs = hpath.getFileSystem(spark.sparkContext._jsc.hadoopConfiguration())
-    return fs.exists(hpath)
-
-
-def _band_frame(
-    docs: DataFrame,
-    id_col: str,
-    text_col: str,
-    num_hashes: int,
-    bands: int,
-    shingle_n: int,
-) -> DataFrame:
-    return lsh_bands(
-        minhash_signatures(docs, id_col, text_col, num_hashes, shingle_n),
-        id_col=id_col,
-        bands=bands,
-        num_hashes=num_hashes,
-    )
-
-
-def _intra_pairs(bands_df: DataFrame, id_col: str) -> DataFrame:
-    """Banded self-join within one epoch — identical join shape to
-    ``minhash_lsh_pairs`` (equi-join on (band_id, band_sig), id-ordered
-    to emit each unordered pair once)."""
-    a, b = bands_df.alias("a"), bands_df.alias("b")
-    return a.join(
-        b,
-        on=[
-            F.col("a.band_id") == F.col("b.band_id"),
-            F.col("a.band_sig") == F.col("b.band_sig"),
-            F.col(f"a.{id_col}") < F.col(f"b.{id_col}"),
-        ],
-    ).select(
-        F.col(f"a.{id_col}").alias("doc_a"),
-        F.col(f"b.{id_col}").alias("doc_b"),
-    )
-
-
-def _cross_pairs(
-    index_bands: DataFrame, batch_bands: DataFrame, id_col: str
-) -> DataFrame:
-    """Index vs broadcast batch bands; pair ordered (min, max) so the
-    accumulated stream output matches batch ``minhash_lsh_pairs``
-    regardless of which side arrived first."""
-    i, n = index_bands.alias("i"), F.broadcast(batch_bands).alias("n")
-    matched = i.join(
-        n,
-        on=[
-            F.col("i.band_id") == F.col("n.band_id"),
-            F.col("i.band_sig") == F.col("n.band_sig"),
-            F.col(f"i.{id_col}") != F.col(f"n.{id_col}"),
-        ],
-    )
-    lo = F.least(F.col(f"i.{id_col}"), F.col(f"n.{id_col}"))
-    hi = F.greatest(F.col(f"i.{id_col}"), F.col(f"n.{id_col}"))
-    return matched.select(lo.alias("doc_a"), hi.alias("doc_b"))
 
 
 def lsh_neardup_batch_fn(
@@ -143,21 +84,19 @@ def lsh_neardup_batch_fn(
     def batch_fn(batch: DataFrame, epoch_id: int) -> None:
         if not batch.take(1):
             return
-        spark = batch.sparkSession
-        bands_df = _band_frame(
-            batch, id_col, text_col, num_hashes, bands, shingle_n
-        ).persist()
-        try:
-            pairs = _intra_pairs(bands_df, id_col)
-            if _path_exists(spark, index_dir):
-                index_bands = spark.read.schema(INDEX_SCHEMA).parquet(index_dir)
-                pairs = pairs.unionByName(
-                    _cross_pairs(index_bands, bands_df, id_col)
-                )
-            pairs.distinct().write.mode("append").parquet(pairs_dir)
-            bands_df.write.mode("append").parquet(index_dir)
-        finally:
-            bands_df.unpersist()
+        bands_df = lsh_bands(
+            minhash_signatures(batch, id_col, text_col, num_hashes, shingle_n),
+            id_col=id_col,
+            bands=bands,
+            num_hashes=num_hashes,
+        )
+        index_epoch(
+            bands_df,
+            partial(lsh_band_pairs, id_col=id_col),
+            index_dir,
+            pairs_dir,
+            INDEX_SCHEMA,
+        )
 
     return batch_fn
 
@@ -172,7 +111,6 @@ def lsh_neardup_stream(
     num_hashes: int = DEFAULT_NUM_HASHES,
     bands: int = DEFAULT_BANDS,
     shingle_n: int = DEFAULT_SHINGLE,
-    trigger_once: bool = True,
 ) -> StreamingQuery:
     """Wire a document stream into the incremental LSH loop (see module
     docstring). Returns the started query; drain with
@@ -187,12 +125,7 @@ def lsh_neardup_stream(
         bands=bands,
         shingle_n=shingle_n,
     )
-    writer = stream.writeStream.foreachBatch(batch_fn).option(
-        "checkpointLocation", checkpoint_dir
-    )
-    if trigger_once:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return run_foreach_batch(stream, batch_fn, checkpoint_dir)
 
 
 def accumulated_pairs(spark: SparkSession, pairs_dir: str) -> DataFrame:

@@ -6,14 +6,15 @@ tier's ``streaming/lsh.py`` and the embedding tier's
 
 Shape: a persisted FINGERPRINT INDEX (parquet table of (doc_id, fp)
 rows — 16 bytes per media object, the smallest possible dedup state)
-plus a ``foreachBatch`` loop. Each micro-batch:
+plus a ``foreachBatch`` loop. Each micro-batch is one
+``streaming/store.index_epoch`` over its fingerprints:
 
 1. decodes the epoch's payloads through the Arrow-batched fingerprint
    lane ONCE (persisted for the epoch);
 2. emits intra-batch pairs via the pigeonhole chunk self-join
-   (``simhash_neardup_pairs`` — never all-pairs);
+   (``simhash_neardup_pairs(fp)`` — never all-pairs);
 3. emits cross-batch pairs by joining the persisted index against the
-   BROADCAST batch fingerprints (``simhash_neardup_cross_pairs``):
+   BROADCAST batch fingerprints (``simhash_neardup_pairs(fp, index)``):
    the index is filtered map-side and never shuffles;
 4. appends the batch fingerprints to the index.
 
@@ -37,16 +38,17 @@ this module is part of the multimodal LLM-pipeline extension tier.
 from __future__ import annotations
 
 from collections.abc import Callable
+from functools import partial
 
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
 from dataengineering_spark.operators.dedup import (
-    simhash_neardup_cross_pairs,
     simhash_neardup_pairs,
+    video_neardup_pairs,
 )
-from dataengineering_spark.streaming.lsh import _path_exists
+from dataengineering_spark.streaming.store import atomic_rewrite, index_epoch
+from dataengineering_spark.streaming.structured import run_foreach_batch
 
 
 def media_neardup_batch_fn(
@@ -85,27 +87,16 @@ def media_neardup_batch_fn(
     def batch_fn(batch: DataFrame, epoch_id: int) -> None:
         if not batch.take(1):
             return
-        spark = batch.sparkSession
-        fp = hasher(batch).persist()
-        try:
-            pairs = simhash_neardup_pairs(
-                fp, max_distance=max_distance, id_col=id_col,
-                sim_col=sim_col, bits=bits,
-            )
-            if _path_exists(spark, index_dir):
-                index = spark.read.schema(
-                    f"`{id_col}` long, `{sim_col}` long"
-                ).parquet(index_dir)
-                pairs = pairs.unionByName(
-                    simhash_neardup_cross_pairs(
-                        index, fp, max_distance=max_distance,
-                        id_col=id_col, sim_col=sim_col, bits=bits,
-                    )
-                )
-            pairs.distinct().write.mode("append").parquet(pairs_dir)
-            fp.write.mode("append").parquet(index_dir)
-        finally:
-            fp.unpersist()
+        index_epoch(
+            hasher(batch),
+            partial(
+                simhash_neardup_pairs, max_distance=max_distance,
+                id_col=id_col, sim_col=sim_col, bits=bits,
+            ),
+            index_dir,
+            pairs_dir,
+            f"`{id_col}` long, `{sim_col}` long",
+        )
 
     return batch_fn
 
@@ -120,7 +111,6 @@ def media_neardup_stream(
     checkpoint_dir: str,
     max_distance: int = 3,
     id_col: str = "doc_id",
-    trigger_once: bool = True,
 ) -> StreamingQuery:
     """Wire a media payload stream into the incremental fingerprint
     loop (see module docstring). Drain with ``awaitTermination`` and
@@ -129,12 +119,7 @@ def media_neardup_stream(
         hasher, sim_col, bits, index_dir, pairs_dir,
         max_distance=max_distance, id_col=id_col,
     )
-    writer = stream.writeStream.foreachBatch(batch_fn).option(
-        "checkpointLocation", checkpoint_dir
-    )
-    if trigger_once:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return run_foreach_batch(stream, batch_fn, checkpoint_dir)
 
 
 def accumulated_media_pairs(spark, pairs_dir: str) -> DataFrame:
@@ -174,8 +159,6 @@ def repair_accumulated_pairs(
     derived state — recomputable from the index — and the rewrite is
     atomic (streaming/store.py tmp + rename, r13): a crash at any
     point leaves the old pair set or the new one, never a partial."""
-    from dataengineering_spark.streaming.store import atomic_rewrite
-
     index = (
         spark.read.schema(f"`{id_col}` long, `{sim_col}` long")
         .parquet(index_dir)
@@ -206,9 +189,6 @@ def repair_accumulated_video_pairs(
     accumulated (doc_id, slot, dhash) frame-hash index with the
     per-(slot, chunk, value) hot-bucket cap and atomically rewrites
     the pairs store to the capped-batch (doc_a, doc_b, n_match) set."""
-    from dataengineering_spark.operators.dedup import video_neardup_pairs
-    from dataengineering_spark.streaming.store import atomic_rewrite
-
     index = (
         spark.read.schema(f"`{id_col}` long, slot int, dhash long")
         .parquet(index_dir)
@@ -240,45 +220,32 @@ def video_neardup_batch_fn(
     (``n_samples`` longs per video instead of one): the epoch's
     payloads run the sampled-frame decode lane once, intra-batch
     pairs come from the slot-aligned pigeonhole self-join
-    (``video_neardup_pairs``), cross-batch pairs from the broadcast
+    (``video_neardup_pairs(fh)``), cross-batch pairs from the broadcast
     join against the persisted frame-hash index
-    (``video_neardup_cross_pairs``), then the epoch's hashes append to
-    the index. Same exactly-once shape as media_neardup_batch_fn: a
-    video's whole fingerprint lands in its one epoch, so every pair
-    surfaces exactly once and accumulated pairs equal the batch plan
-    (distinct() on read absorbs foreachBatch replays)."""
+    (``video_neardup_pairs(fh, index)``), then the epoch's hashes
+    append to the index. Same exactly-once shape as
+    media_neardup_batch_fn: a video's whole fingerprint lands in its
+    one epoch, so every pair surfaces exactly once and accumulated
+    pairs equal the batch plan (distinct() on read absorbs
+    foreachBatch replays)."""
     from dataengineering_spark.functions.multimodal import video_frame_hashes
-    from dataengineering_spark.operators.dedup import (
-        video_neardup_cross_pairs,
-        video_neardup_pairs,
-    )
 
     def batch_fn(batch: DataFrame, epoch_id: int) -> None:
         if not batch.take(1):
             return
-        spark = batch.sparkSession
-        fh = video_frame_hashes(
-            batch, n_samples=n_samples, id_col=id_col, payload_col=payload_col
-        ).persist()
-        try:
-            pairs = video_neardup_pairs(
-                fh, max_distance=max_distance, min_matching=min_matching,
-                id_col=id_col,
-            )
-            if _path_exists(spark, index_dir):
-                index = spark.read.schema(
-                    f"`{id_col}` long, slot int, dhash long"
-                ).parquet(index_dir)
-                pairs = pairs.unionByName(
-                    video_neardup_cross_pairs(
-                        index, fh, max_distance=max_distance,
-                        min_matching=min_matching, id_col=id_col,
-                    )
-                )
-            pairs.distinct().write.mode("append").parquet(pairs_dir)
-            fh.write.mode("append").parquet(index_dir)
-        finally:
-            fh.unpersist()
+        index_epoch(
+            video_frame_hashes(
+                batch, n_samples=n_samples, id_col=id_col,
+                payload_col=payload_col,
+            ),
+            partial(
+                video_neardup_pairs, max_distance=max_distance,
+                min_matching=min_matching, id_col=id_col,
+            ),
+            index_dir,
+            pairs_dir,
+            f"`{id_col}` long, slot int, dhash long",
+        )
 
     return batch_fn
 
@@ -293,7 +260,6 @@ def video_neardup_stream(
     min_matching: int = 3,
     id_col: str = "doc_id",
     payload_col: str = "payload",
-    trigger_once: bool = True,
 ) -> StreamingQuery:
     """Wire a video payload stream into the incremental frame-hash
     loop; read accumulated pairs with ``accumulated_video_pairs``."""
@@ -302,12 +268,7 @@ def video_neardup_stream(
         max_distance=max_distance, min_matching=min_matching,
         id_col=id_col, payload_col=payload_col,
     )
-    writer = stream.writeStream.foreachBatch(batch_fn).option(
-        "checkpointLocation", checkpoint_dir
-    )
-    if trigger_once:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return run_foreach_batch(stream, batch_fn, checkpoint_dir)
 
 
 def accumulated_video_pairs(spark, pairs_dir: str) -> DataFrame:

@@ -31,6 +31,7 @@ from pyspark.sql.streaming import StreamingQuery
 
 from dataengineering_spark.streaming.rate_limited import block_range_stream
 from dataengineering_spark.streaming.state import SyncState, SyncStateStore
+from dataengineering_spark.streaming.structured import run_foreach_batch
 
 
 def commit_from_destination(
@@ -103,11 +104,4 @@ def streaming_sync_pipeline(
             out.unpersist()
         commit_from_destination(store, stream_name, destination_max)
 
-    writer = stream.writeStream.foreachBatch(batch_fn).option(
-        "checkpointLocation", checkpoint_dir
-    )
-    if trigger_once:
-        writer = writer.trigger(availableNow=True)
-    else:
-        writer = writer.trigger(processingTime="0 seconds")
-    return writer.start()
+    return run_foreach_batch(stream, batch_fn, checkpoint_dir, trigger_once)

@@ -8,7 +8,7 @@ the band role: a FROZEN coarse quantizer (centroids trained once —
 the train-once/serve-many contract the streaming ANN tier already
 established in streaming/ann.py) plus a persisted CELL INDEX (parquet
 table of (vec_id, cid, v, dd) rows) and a ``foreachBatch`` loop. Each
-micro-batch:
+micro-batch is one ``streaming/store.index_epoch`` over its cells:
 
 1. assigns the batch's vectors to cells — a narrow map against the
    frozen centroid literals (no Exchange), self-dot precomputed;
@@ -43,12 +43,15 @@ of the index.
 
 from __future__ import annotations
 
+from functools import partial
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
 from dataengineering_spark.operators.dedup import semantic_candidate_pairs
-from dataengineering_spark.streaming.lsh import _path_exists
+from dataengineering_spark.streaming.store import index_epoch, recover_store
+from dataengineering_spark.streaming.structured import run_foreach_batch
 
 CELL_INDEX_SCHEMA = "vec_id long, cid int, v array<double>, dd double"
 
@@ -56,10 +59,11 @@ CELL_INDEX_SCHEMA = "vec_id long, cid int, v array<double>, dd double"
 def _batch_cells(
     batch: DataFrame, cent_rows, id_col: str, vec_col: str
 ) -> DataFrame:
-    """Assign the epoch's vectors under the frozen quantizer.
-    ``cent_rows`` is either the flat ``ivf_train_rows`` list or the
-    two-level ``(super_rows, sub_by_super, c2)`` triple — the scale
-    shape for C in the thousands, where flat literal assignment is
+    """Assign the epoch's vectors under the frozen quantizer, in the
+    cell-index layout (vec_id, cid, v, dd). ``cent_rows`` is either the
+    flat ``ivf_train_rows`` list or the two-level ``(super_rows,
+    sub_by_super, c2)`` triple — the scale shape for C in the
+    thousands, where flat literal assignment is
     architecturally dead (see operators/similarity.two_level_assign);
     the composite cid plays the cell role identically downstream."""
     from dataengineering_spark.operators.similarity import (
@@ -77,7 +81,9 @@ def _batch_cells(
         cells = two_level_assign(e, super_rows, sub_by_super, c2)
     else:
         cells = ivf_assign(e, cent_rows)
-    return cells.withColumn("dd", dot(F.col("v"), F.col("v")))
+    return cells.select(
+        "vec_id", "cid", "v", dot(F.col("v"), F.col("v")).alias("dd")
+    )
 
 
 def semantic_neardup_batch_fn(
@@ -100,25 +106,13 @@ def semantic_neardup_batch_fn(
     def batch_fn(batch: DataFrame, epoch_id: int) -> None:
         if not batch.take(1):
             return
-        spark = batch.sparkSession
-        cells = _batch_cells(batch, cent_rows, id_col, vec_col).persist()
-        try:
-            pairs = semantic_candidate_pairs(cells, threshold=threshold)
-            if _path_exists(spark, index_dir):
-                index_cells = spark.read.schema(CELL_INDEX_SCHEMA).parquet(
-                    index_dir
-                )
-                pairs = pairs.unionByName(
-                    semantic_candidate_pairs(
-                        cells, index_cells=index_cells, threshold=threshold
-                    )
-                )
-            pairs.distinct().write.mode("append").parquet(pairs_dir)
-            cells.select("vec_id", "cid", "v", "dd").write.mode(
-                "append"
-            ).parquet(index_dir)
-        finally:
-            cells.unpersist()
+        index_epoch(
+            _batch_cells(batch, cent_rows, id_col, vec_col),
+            partial(semantic_candidate_pairs, threshold=threshold),
+            index_dir,
+            pairs_dir,
+            CELL_INDEX_SCHEMA,
+        )
 
     return batch_fn
 
@@ -132,7 +126,6 @@ def semantic_neardup_stream(
     threshold: float = 0.35,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    trigger_once: bool = True,
 ) -> StreamingQuery:
     """Wire an embedding stream into the incremental semantic-dedup
     loop (see module docstring). ``cent_rows`` is the frozen quantizer
@@ -149,12 +142,7 @@ def semantic_neardup_stream(
         id_col=id_col,
         vec_col=vec_col,
     )
-    writer = stream.writeStream.foreachBatch(batch_fn).option(
-        "checkpointLocation", checkpoint_dir
-    )
-    if trigger_once:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return run_foreach_batch(stream, batch_fn, checkpoint_dir)
 
 
 def accumulated_semantic_pairs(spark: SparkSession, pairs_dir: str) -> DataFrame:
@@ -164,8 +152,6 @@ def accumulated_semantic_pairs(spark: SparkSession, pairs_dir: str) -> DataFrame
     torn-store recovery first (streaming/store.py): a crash during a
     maintenance rewrite can never surface here as a partial edge set
     (ADVICE r12)."""
-    from dataengineering_spark.streaming.store import recover_store
-
     recover_store(spark, pairs_dir)
     return (
         spark.read.schema("vec_a long, vec_b long")

@@ -44,6 +44,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
 from dataengineering_spark.operators.chunking import token_budget_shards
+from dataengineering_spark.streaming.structured import run_foreach_batch
 
 
 def _state_dir(root: str) -> str:
@@ -123,18 +124,12 @@ def token_shards_stream(
     size_col: str,
     order_col: str,
     budget: int,
-    trigger_once: bool = True,
 ) -> StreamingQuery:
     """Wire a document stream into the continuing shard assigner."""
     batch_fn = token_shards_batch_fn(
         state_root, out_dir, size_col, order_col, budget
     )
-    writer = stream.writeStream.foreachBatch(batch_fn).option(
-        "checkpointLocation", checkpoint_dir
-    )
-    if trigger_once:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return run_foreach_batch(stream, batch_fn, checkpoint_dir)
 
 
 def accumulated_shards(spark: SparkSession, out_dir: str) -> DataFrame:

@@ -1,5 +1,7 @@
-"""Crash-safe rewrite protocol for the streaming tier's parquet state
-stores (pair stores, fingerprint/cell indexes, reps indexes).
+"""The streaming tier's parquet state stores (pair stores,
+fingerprint/cell indexes, reps indexes): the append-only epoch step
+every incremental near-dup leg runs (:func:`index_epoch`), and the
+crash-safe rewrite protocol their maintenance runs.
 
 The accumulated stores are APPEND-only during ingest, but the
 maintenance operations — pair-store compaction
@@ -39,6 +41,8 @@ crash needs a manual re-pair" into "a crash needs nothing".
 
 from __future__ import annotations
 
+from collections.abc import Callable
+
 from pyspark.sql import DataFrame, SparkSession
 
 TMP_SUFFIX = "._rewrite_tmp"
@@ -57,13 +61,21 @@ def _p(jvm, path: str):
     return jvm.org.apache.hadoop.fs.Path(path)
 
 
-def store_exists(spark: SparkSession, path: str) -> bool:
-    """`streaming.lsh._path_exists` for maintained stores: runs crash
-    recovery first, so a store torn by a mid-rewrite crash reads as its
-    recovered self, never as absent/partial."""
-    recover_store(spark, path)
+def path_exists(spark: SparkSession, path: str) -> bool:
+    """Existence probe through the Hadoop FS API so it works on any
+    filesystem the session can read (local, HDFS, object stores) —
+    reading a nonexistent parquet path fails lazily at action time,
+    too late to branch on."""
     jvm, fs = _fs(spark, path)
     return fs.exists(_p(jvm, path))
+
+
+def store_exists(spark: SparkSession, path: str) -> bool:
+    """:func:`path_exists` for maintained stores: runs crash recovery
+    first, so a store torn by a mid-rewrite crash reads as its
+    recovered self, never as absent/partial."""
+    recover_store(spark, path)
+    return path_exists(spark, path)
 
 
 def recover_store(spark: SparkSession, path: str) -> str:
@@ -125,3 +137,59 @@ def atomic_rewrite(spark: SparkSession, frame: DataFrame, path: str) -> None:
         raise IOError(f"atomic_rewrite: rename {tmp} -> {live} failed")
     if fs.exists(old):
         fs.delete(old, True)
+
+
+def index_epoch(
+    keys: DataFrame,
+    pair_fn: Callable[..., DataFrame],
+    index_dir: str,
+    pairs_dir: str,
+    index_schema: str,
+    reps_index_dir: str | None = None,
+) -> None:
+    """One epoch of an append-only near-dup index: screen the epoch's
+    ``keys`` (band / cell / fingerprint rows, already in the index's
+    column layout) against themselves and against the persisted index,
+    then append them to it.
+
+    ``pair_fn(keys)`` is the pair operator's self-join and
+    ``pair_fn(keys, index)`` its index join (index vs broadcast keys),
+    the unified signature of ``lsh_band_pairs``,
+    ``simhash_neardup_pairs``, ``video_neardup_pairs`` and
+    ``semantic_candidate_pairs``. The contract every incremental leg
+    shares:
+
+    - ``keys`` are persisted for the epoch, so the key lane (signatures,
+      cell assignment, payload decode) runs once;
+    - the index join reads ``reps_index_dir`` when that store exists,
+      else the full ``index_dir`` (read with ``index_schema``); with
+      neither, the epoch has only its self-join pairs;
+    - pairs are written (``distinct()``, appended to ``pairs_dir``)
+      BEFORE the keys are appended to the index(es).
+
+    Every key belongs to exactly one epoch, so each pair surfaces
+    exactly once — in the self-join if both sides arrived together,
+    else in the index join of the later side's epoch — and the
+    accumulated pairs of a drained stream equal the batch self-join.
+    A replayed epoch re-appends deterministic rows to both stores;
+    readers ``distinct()`` them away."""
+    spark = keys.sparkSession
+    keys = keys.persist()
+    try:
+        pairs = pair_fn(keys)
+        join_dir = (
+            reps_index_dir
+            if reps_index_dir is not None and path_exists(spark, reps_index_dir)
+            else index_dir
+        )
+        if path_exists(spark, join_dir):
+            index = spark.read.schema(index_schema).parquet(join_dir)
+            pairs = pairs.unionByName(pair_fn(keys, index))
+        pairs.distinct().write.mode("append").parquet(pairs_dir)
+        keys.write.mode("append").parquet(index_dir)
+        if reps_index_dir is not None:
+            # new rows stay individually matchable until the next
+            # reps refresh folds them into components
+            keys.write.mode("append").parquet(reps_index_dir)
+    finally:
+        keys.unpersist()

@@ -170,7 +170,9 @@ def run_foreach_batch(
     epoch gets the full DataFrame API (multi-sink, joins, upserts),
     with the checkpoint providing exactly-once epoch tracking.
     ``trigger_once`` processes the backlog then stops (the
-    scheduler-driven operation mode of the reference)."""
+    scheduler-driven operation mode of the reference); ``False`` runs
+    continuously on the default back-to-back micro-batch trigger. Every
+    streaming face of the package starts its query through here."""
     writer = stream.writeStream.foreachBatch(batch_fn).option(
         "checkpointLocation", checkpoint_dir
     )

@@ -361,11 +361,13 @@ def test_audio_fingerprint_gain_invariance_and_band_recall(spark):
 
 def test_pigeonhole_joins_accept_quoted_column_names(spark):
     """The chunk-join operators interpolate nothing user-supplied into
-    expr strings: dotted/hyphened id and hash column names must work
-    (the trailing_range_agg hazard class, swept proactively)."""
+    expr strings: dotted/hyphened id, slot and hash column names must
+    work on both the self-join and the index-join branch, for the
+    SimHash and the video lane (the trailing_range_agg hazard class,
+    swept proactively)."""
     from dataengineering_spark.operators.dedup import (
-        simhash_neardup_cross_pairs,
         simhash_neardup_pairs,
+        video_neardup_pairs,
     )
 
     rows = [(i, (i * 2654435761) % (1 << 31)) for i in range(40)]
@@ -375,22 +377,39 @@ def test_pigeonhole_joins_accept_quoted_column_names(spark):
         .withColumnRenamed("a", "doc.id-x")
         .withColumnRenamed("b", "sim.hash-y")
     )
-    got = {
-        (r.doc_a, r.doc_b)
-        for r in simhash_neardup_pairs(
-            df, id_col="doc.id-x", sim_col="sim.hash-y"
-        ).collect()
-    }
+    cols = {"id_col": "doc.id-x", "sim_col": "sim.hash-y"}
     want = {(i, 100 + i) for i in range(10)}
+    got = {(r.doc_a, r.doc_b) for r in simhash_neardup_pairs(df, **cols).collect()}
     assert got == want
     idx, batch = df.filter("`doc.id-x` < 100"), df.filter("`doc.id-x` >= 100")
-    got_cross = {
+    got_index = {
         (r.doc_a, r.doc_b)
-        for r in simhash_neardup_cross_pairs(
-            idx, batch, id_col="doc.id-x", sim_col="sim.hash-y"
-        ).collect()
+        for r in simhash_neardup_pairs(batch, index=idx, **cols).collect()
     }
-    assert got_cross == want
+    assert got_index == want
+
+    # videos 0..19, four slots each; 100+v replays video v (v < 5) with
+    # one flipped bit per frame, so exactly those five pairs match
+    frames = [
+        (v, s, ((v * 4 + s + 1) * 0x9E3779B97F4A7C15) % (1 << 63))
+        for v in range(20)
+        for s in range(4)
+    ]
+    frames += [(100 + v, s, h ^ (1 << (3 * s))) for v, s, h in frames if v < 5]
+    fh = spark.createDataFrame(frames, ["doc.id-x", "slot.no-z", "d.hash-w"])
+    vcols = {"id_col": "doc.id-x", "slot_col": "slot.no-z", "sim_col": "d.hash-w"}
+    want_v = {(v, 100 + v, 4) for v in range(5)}
+    got_v = {tuple(r) for r in video_neardup_pairs(fh, **vcols).collect()}
+    assert got_v == want_v
+    vidx, vbatch = (
+        fh.filter("`doc.id-x` < 100"),
+        fh.filter("`doc.id-x` >= 100"),
+    )
+    got_v_index = {
+        tuple(r)
+        for r in video_neardup_pairs(vbatch, index=vidx, **vcols).collect()
+    }
+    assert got_v_index == want_v
 
 
 def test_twap_accepts_quoted_ts_name(spark):

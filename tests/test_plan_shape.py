@@ -231,6 +231,80 @@ def test_incremental_lsh_broadcasts_new_batch(spark):
     assert "SortMergeJoin" not in plan, plan
 
 
+def _pair_family_inputs(spark, family: str):
+    """(batch keys, index) frames in the layout each pair family joins."""
+    from dataengineering_spark.operators.dedup import lsh_bands, minhash_signatures
+
+    if family == "lsh_band_pairs":
+        docs = spark.createDataFrame(
+            [(i, f"document {i} about incremental near duplicate screening")
+             for i in range(8)],
+            "doc_id long, text string",
+        )
+        frame = lsh_bands(minhash_signatures(docs))
+        key = "doc_id"
+    elif family == "simhash_neardup_pairs":
+        frame = spark.createDataFrame(
+            [(i, (i * 2654435761) % (1 << 31)) for i in range(20)],
+            "doc_id long, simhash long",
+        )
+        key = "doc_id"
+    elif family == "video_neardup_pairs":
+        frame = spark.createDataFrame(
+            [(v, s, ((v * 4 + s + 1) * 0x9E3779B97F4A7C15) % (1 << 63))
+             for v in range(10) for s in range(4)],
+            "doc_id long, slot int, dhash long",
+        )
+        key = "doc_id"
+    else:
+        frame = spark.createDataFrame(
+            [(i, [float(i), 1.0], float(i * i + 1), i % 3) for i in range(20)],
+            "vec_id long, v array<double>, dd double, cid int",
+        )
+        key = "vec_id"
+    return frame.filter(F.col(key) >= 5), frame.filter(F.col(key) < 5)
+
+
+@pytest.mark.parametrize(
+    "family",
+    [
+        "lsh_band_pairs",
+        "simhash_neardup_pairs",
+        "video_neardup_pairs",
+        "semantic_candidate_pairs",
+    ],
+)
+def test_index_join_broadcasts_batch_side(spark, family):
+    """The incremental scale contract of every pair family: called with
+    ``index=``, the (huge, persisted) index is filtered map-side
+    against the BROADCAST batch keys and never shuffles. Size-based
+    broadcasting is switched off, so only the operator's own hint can
+    plan the BroadcastHashJoin."""
+    from dataengineering_spark.operators import dedup
+
+    keys, index = _pair_family_inputs(spark, family)
+    prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
+    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+    try:
+        plan = plan_of(getattr(dedup, family)(keys, index=index))
+    finally:
+        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
+    assert "BroadcastHashJoin" in plan, plan
+    assert "SortMergeJoin" not in plan, plan
+
+
+def test_index_join_refuses_bucket_cap(spark):
+    """The hot-bucket cap is a whole-corpus function: an epoch-local cap
+    would break stream == batch, so the pigeonhole families refuse
+    ``index`` together with ``max_bucket_size`` before planning."""
+    from dataengineering_spark.operators import dedup
+
+    for family in ("simhash_neardup_pairs", "video_neardup_pairs"):
+        keys, index = _pair_family_inputs(spark, family)
+        with pytest.raises(ValueError, match="max_bucket_size"):
+            getattr(dedup, family)(keys, index=index, max_bucket_size=10)
+
+
 def test_pq_encode_is_narrow_map(spark):
     """PQ corpus encoding must be a pure narrow map: codebooks inlined
     as literals, per-subspace argmin in-row — no Exchange, Join, or

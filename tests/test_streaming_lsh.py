@@ -132,24 +132,3 @@ def test_epoch_replay_is_idempotent_after_distinct(spark, tmp_path):
         for r in accumulated_pairs(spark, str(tmp_path / "pairs")).collect()
     }
     assert after == before
-
-
-def test_cross_join_broadcasts_batch_side(spark, tmp_path):
-    """The scale contract: the index side of the cross-epoch join is
-    filtered map-side against BROADCAST batch bands — the index never
-    shuffles. Assert the executed plan broadcasts."""
-    from dataengineering_spark.operators.dedup import lsh_bands, minhash_signatures
-    from dataengineering_spark.streaming.lsh import _cross_pairs
-
-    docs = spark.createDataFrame(
-        [(i, DOCS[i]) for i in DOCS], "doc_id long, text string"
-    )
-    bands_df = lsh_bands(minhash_signatures(docs))
-    plan = (
-        _cross_pairs(bands_df, bands_df.limit(3), "doc_id")
-        ._jdf.queryExecution()
-        .executedPlan()
-        .toString()
-    )
-    assert "BroadcastHashJoin" in plan
-    assert "SortMergeJoin" not in plan
